@@ -10,7 +10,8 @@ physical strategy. Nothing here is a port of the C engine.
 Layout:
     session      tuned SparkSession builder (AQE, UTC, Arrow)
     catalog      table loading for the /root/testdata parquet layout
-    functions/   reusable column expressions (tokenize, djb2, cosine)
+    functions/   reusable column expressions (tokenize, token windows,
+                 djb2, cosine)
     operators/   query library: mapreduce_core, relational, llm
     mr/          reference-API compatibility layer (MR_Run contract)
     streaming/   Structured Streaming forms of the event-time queries

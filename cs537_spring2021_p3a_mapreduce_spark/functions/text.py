@@ -1,5 +1,6 @@
-"""Text column expressions: tokenization and the reference's djb2
-partition function, both as pure Catalyst expressions.
+"""Text column expressions: tokenization, k-token sliding windows and
+the reference's djb2 partition function, all pure Catalyst
+expressions.
 
 Reference trace:
 - tokenizer: `strsep` on " \\t\\n\\r" per line (main.c:22-27). We use
@@ -13,10 +14,10 @@ Reference trace:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-_UINT64_MOD_10 = 6  # 2**64 % 10 == 6; general form computed per-n below.
 
 
 def tokens(text: Column | str) -> Column:
@@ -32,6 +33,27 @@ def tokens(text: Column | str) -> Column:
     hot tokenize path."""
     col = F.col(text) if isinstance(text, str) else text
     return F.array_remove(F.split(col, r"\s+"), "")
+
+
+def token_windows(arr: Column, k: int, combine: Callable[..., Column]) -> Column:
+    """Array of ``combine(t_i, …, t_{i+k-1})`` over every k-token
+    sliding window of the token array ``arr`` (empty when it holds
+    fewer than k tokens) — the narrow n-gram/shingle kernel: no
+    explode, no window function, no shuffle. ``combine`` receives k
+    element columns, e.g. ``F.xxhash64`` for an 8-byte identity or
+    ``functools.partial(F.concat_ws, sep)`` for the joined string.
+
+    ``arr`` must be a NAMED column reference (materialize
+    ``tokens(...)`` with a select first): an inline expression would
+    re-run per element access inside the lambda, since Catalyst does
+    not CSE into lambda bodies — O(len²)."""
+    n_windows = F.size(arr) - (k - 1)
+    starts = F.when(n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)).otherwise(
+        F.array().cast("array<int>")
+    )
+    return F.transform(
+        starts, lambda i: combine(*[F.get(arr, i + j) for j in range(k)])
+    )
 
 
 def djb2_partition(key: Column | str, n_partitions: int) -> Column:
@@ -77,16 +99,4 @@ def djb2_partition(key: Column | str, n_partitions: int) -> Column:
         lambda acc: F.pmod(
             F.pmod(acc.hi, n) * F.lit((1 << 32) % n_partitions) + acc.lo, n
         ),
-    )
-
-
-def djb2_oracle_sql(key_expr: str, n_partitions: int) -> str:
-    """DuckDB-SQL rendering of the same djb2 partition id, using
-    HUGEINT (128-bit) arithmetic with an explicit mod-2^64 at each
-    step — DuckDB BIGINT traps on overflow rather than wrapping."""
-    return (
-        "list_reduce("
-        f"  list_prepend(5381::HUGEINT, [ord(c)::HUGEINT for c in string_split({key_expr}, '')]),"
-        "  (acc, c) -> (acc * 33 + c) % 18446744073709551616::HUGEINT"
-        f") % {n_partitions}"
     )

@@ -1,30 +1,47 @@
-"""Sub-quadratic near-duplicate detection: MinHash-LSH and SimHash.
+"""Near-duplicate detection: MinHash-LSH, SimHash, PPJoin, containment,
+sorted-neighborhood, KMV sketches and content-defined chunking.
 
-These are the 100 TB dedup paths — candidate generation is a
-hash-bucket equi-join (shuffle ∝ corpus size, never corpus²);
-exact verification runs only on candidate pairs. The quadratic
-baselines they replace live in llm.py (dedup_ngram /
+Every candidate tier is sub-quadratic — candidates come from a
+hash-bucket or prefix equi-join (shuffle ∝ corpus size, never
+corpus²) and exact verification runs only on candidate pairs. The
+quadratic baselines they replace live in llm.py (dedup_ngram /
 dedup_embedding) and double as recall oracles in tests.
 
-No SQL oracle exists for these (the driver records rows-only);
-tests/test_dedup.py asserts recall/precision against exact Jaccard
-on planted near-duplicates instead (FIXTURES.md's mandate).
+MinHash-LSH kernel (the section below the constants): each stage of
+shingle → signature → band → verify is written once and shared by
+the batch tier (``dedup_minhash``, ``dedup_minhash_int``,
+``dedup_recall_report``), the incremental index
+(``incremental_dedup_index``) and the streaming tiers
+(``streaming.stream_dedup_docs_minhash[_bounded]``,
+``streaming._lsh_band_rows``). The kernels are expression or
+DataFrame builders; each tier keeps its own shape — the batch
+signature is a per-doc ``min`` aggregate, the streaming one a
+per-row ``array_min(transform(...))`` — and the hash family or band
+fold is a parameter, never a branch on the caller.
 
-Everything is expression-only: xxhash64 for the hash family
-(per-seed via the multi-arg form), higher-order functions for
-signatures — no Python UDFs anywhere.
+Oracles: 12 of the 14 registered queries carry a DuckDB oracle in
+``ORACLES``, each an independent statement of the result. The two
+xxhash64 operators (``dedup_minhash``, ``dedup_simhash``) are
+rows-only — DuckDB cannot replay xxhash64 — and tests/test_dedup.py
+asserts their recall/precision against exact Jaccard on planted
+near-duplicates; their ``_int`` twins replay every stage with md5
+folds instead.
+
+Everything is Catalyst expressions except ``cdc_chunk_dedup``, whose
+per-character rolling hash runs vectorized in ``mapInPandas``.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+from collections.abc import Callable
+from functools import partial, reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..session import track_persist
-from ..functions.text import tokens
+from ..functions.text import token_windows, tokens
 
 SHINGLE_K = 3
 N_HASHES = 32
@@ -36,44 +53,92 @@ SIMHASH_BAND_BITS = 16  # 4 bands
 SIMHASH_MAX_HAMMING = 12
 
 
+# ---------------------------------------------------------------------------
+# MinHash-LSH kernel: shingle → signature → band → verify
+# ---------------------------------------------------------------------------
+
+
+def _md5_fold(c: Column, start: int, n_hex: int) -> Column:
+    """``n_hex`` hex digits of md5(c) starting at 1-based ``start``
+    as a non-negative long — the engine-portable integer-hash
+    foundation of the _int LSH twins: Spark computes it as
+    conv(substring(md5, start, n), 16, 10), DuckDB as a positional
+    hex-digit fold (``_md5_fold_sql``); bit-identical by
+    construction, pinned by
+    tests/test_dedup.py::test_md5_fold_engine_equivalence."""
+    return F.conv(F.substring(F.md5(c), start, n_hex), 16, 10).cast("long")
+
+
+def _md5_fold_sql(arg: str, start: int, n_hex: int) -> str:
+    return (
+        f"list_sum(list_transform(generate_series({start}, {start + n_hex - 1}), "
+        f"i -> (strpos('0123456789abcdef', substring(md5({arg}), i, 1)) - 1)::BIGINT "
+        f"* (1::BIGINT << (4 * ({start + n_hex - 1} - i)))))::BIGINT"
+    )
+
+
+def _shingle_strs(arr: Column, k: int = SHINGLE_K) -> Column:
+    """Word-k-shingles of a token-array column as unit-separator-joined
+    STRINGS (token0␟token1␟…) — the engine-portable shingle identity
+    DuckDB can rebuild (``ts[i] || chr(31) || …``)."""
+    return token_windows(arr, k, partial(F.concat_ws, "\x1f"))
+
+
+def _shingle_folds(arr: Column) -> Column:
+    """Per-row array of 48-bit shingle identities (md5 fold of each
+    string shingle) — the streaming tiers' shingle stage; the batch
+    tier explodes the strings first and folds per row
+    (``_folded_shingles``), so both hash the identical integers."""
+    return F.transform(_shingle_strs(arr), lambda s: _md5_fold(s, 1, 12))
+
+
+def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # the token array is a NAMED column before any lambda reads it
+    # (see token_windows)
+    return table(spark, sf_dir, "documents").select(
+        "doc_id", tokens("text").alias("toks")
+    )
+
+
 def _shingles_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, shingle int64) WITH duplicates — fully narrow, no
-    shuffle at all. Min-aggregation (signatures) is duplicate-
-    insensitive, so the LSH stage consumes this directly; only the
-    exact-Jaccard verify needs sets, and it deduplicates AFTER
-    restricting to candidate docs (a semi-join-sized input instead
-    of the whole corpus)."""
-    docs = table(spark, sf_dir, "documents")
-    # materialize the token array as a named column FIRST: inlining
-    # tokens("text") into every F.get would re-run the split per
-    # element access (no CSE inside lambda bodies) — O(len²)
-    toks = docs.select("doc_id", tokens("text").alias("toks"))
-    arr = F.col("toks")
-    n_windows = F.size(arr) - (SHINGLE_K - 1)
-    sliding = F.when(n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    shingle_arr = F.transform(
-        sliding,
-        lambda i: F.xxhash64(*[F.get(arr, i + j) for j in range(SHINGLE_K)]),
-    )
-    return toks.select("doc_id", F.explode(shingle_arr).alias("shingle"))
+    """(doc_id, sh int64) WITH duplicates — fully narrow, no shuffle
+    at all. Each shingle is carried as xxhash64(token_0..token_{K-1})
+    — an 8-byte identity instead of the joined string: every
+    downstream consumer (signature mins, verify equi-join, size
+    counts) only needs shingle IDENTITY, so distincts and joins move
+    ~4× fewer bytes; 64-bit collisions are negligible at any corpus
+    size that fits an exact verify. Min-aggregation (signatures) is
+    duplicate-insensitive, so the LSH stage consumes this directly;
+    only the exact verify needs sets (``_verify_jaccard``)."""
+    toks = _doc_tokens(spark, sf_dir)
+    shingles = token_windows(F.col("toks"), SHINGLE_K, F.xxhash64)
+    return toks.select("doc_id", F.explode(shingles).alias("sh"))
 
 
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, shingle int64): distinct word-SHINGLE_K-shingles,
-    built by sliding over the per-doc token ARRAY with higher-order
-    functions — fully narrow (no window, no shuffle) until the final
-    distinct. A lag/lead-window formulation computes the same thing
-    but pays a full shuffle+sort of every token row first.
-
-    Each shingle is carried as xxhash64(token_0..token_{K-1}) — an
-    8-byte identity instead of the joined string. Every downstream
-    consumer (signature mins, verify equi-join, size counts) only
-    needs shingle IDENTITY, so the distinct and both join shuffles
-    move ~4× fewer bytes; 64-bit collisions are negligible at any
-    corpus size that fits an exact verify."""
+    """(doc_id, sh int64): DISTINCT xxhash64 word-shingles — the
+    posting relation of the exact set-similarity tiers."""
     return _shingles_raw(spark, sf_dir).distinct()
+
+
+def _string_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sh string) WITH duplicates: the string shingles,
+    exploded. Fully narrow, same shape as ``_shingles_raw``."""
+    toks = _doc_tokens(spark, sf_dir)
+    shingles = _shingle_strs(F.col("toks"))
+    return toks.select("doc_id", F.explode(shingles).alias("sh"))
+
+
+def _folded_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sh int64) WITH duplicates: the md5-fold shingle
+    identities of the integer twins. Strings are folded to longs
+    BEFORE anything shuffles (the string form measured ~3.5× slower
+    end-to-end: every verify join moved ~30-byte keys), and no
+    distinct runs here — the signature min is duplicate-insensitive
+    and the verify deduplicates candidate docs only."""
+    return _string_shingles(spark, sf_dir).select(
+        "doc_id", _md5_fold(F.col("sh"), 1, 12).alias("sh")
+    )
 
 
 def _minhash_signatures(shingles: DataFrame) -> DataFrame:
@@ -86,59 +151,158 @@ def _minhash_signatures(shingles: DataFrame) -> DataFrame:
     ×N_HASHES posexplode (which would shuffle 32× the rows to carry
     the same information). Same trick as _simhash_bits."""
     mins = [
-        F.min(F.xxhash64(F.lit(s), F.col("shingle"))).alias(f"m{s}")
+        F.min(F.xxhash64(F.lit(s), F.col("sh"))).alias(f"m{s}")
         for s in range(N_HASHES)
     ]
     return shingles.groupBy("doc_id").agg(*mins)
+
+
+# Universal-hash constants for the integer-MinHash family: 32 fixed
+# (a, b) pairs from random.Random(537) — a < 2^15, b < 2^31 keep
+# a*h + b < 2^63 for 48-bit h; P is the 2^61-1 Mersenne prime.
+_MINHASH_INT_P = (1 << 61) - 1
+
+
+def _minhash_int_ab() -> list[tuple[int, int]]:
+    import random
+
+    rng = random.Random(537)
+    return [
+        (rng.randrange(1, 1 << 15), rng.randrange(0, 1 << 31))
+        for _ in range(N_HASHES)
+    ]
+
+
+_MINHASH_INT_AB = _minhash_int_ab()
+
+
+def _universal_hash(a: int, b: int) -> Callable[[Column], Column]:
+    """h ↦ (a·h + b) mod (2⁶¹−1), one seed of the integer family."""
+    return lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(_MINHASH_INT_P))
+
+
+def _minhash_int_mins(
+    min_of: Callable[[Callable[[Column], Column]], Column],
+) -> list[Column]:
+    """The integer-MinHash signature m0..m{N-1}: seed s scrambles each
+    48-bit shingle identity h as (a_s·h + b_s) mod (2⁶¹−1) and keeps
+    the minimum. ``min_of(scramble)`` reduces one seed over a doc's
+    shingles — ``F.min`` over the batch tier's (doc_id, sh) rows, or
+    ``array_min(transform(hs, scramble))`` per streaming row."""
+    return [
+        min_of(_universal_hash(a, b)).alias(f"m{s}")
+        for s, (a, b) in enumerate(_MINHASH_INT_AB)
+    ]
+
+
+def _int_signatures(hashed: DataFrame) -> DataFrame:
+    """(doc_id, m0..m{N-1}) over (doc_id, sh) md5-fold shingle rows:
+    32 min-aggregate expressions over ONE (doc_id) hash aggregate."""
+    return hashed.groupBy("doc_id").agg(
+        *_minhash_int_mins(lambda f: F.min(f(F.col("sh"))))
+    )
+
+
+def _sig_cols(first: int = 0, n: int = N_HASHES) -> list[Column]:
+    return [F.col(f"m{s}") for s in range(first, first + n)]
+
+
+def _md5_key(*mins: Column) -> Column:
+    """48-bit md5 fold of the comma-joined mins — the engine-portable
+    single-long key of a band (or of the whole signature); the
+    oracles join on the SAME folded key, so even a fold collision
+    yields the identical candidate set on both engines."""
+    return _md5_fold(F.concat_ws(",", *mins), 1, 12)
+
+
+def _band_keys(key: Callable[..., Column]) -> Column:
+    """Array of the N_HASHES // BAND_ROWS band keys of a wide
+    signature row: band b is ``key(m_{b·R}, …, m_{b·R+R-1})`` —
+    ``F.xxhash64`` for the xxhash64 tiers, ``_md5_key`` for the
+    integer twins. A single-long key instead of a concat string or
+    struct: the band join shuffles ~4× fewer bytes, and a key
+    collision can only ADD a candidate, which verify then rejects."""
+    return F.array(
+        *[
+            key(*_sig_cols(b * BAND_ROWS, BAND_ROWS))
+            for b in range(N_HASHES // BAND_ROWS)
+        ]
+    )
+
+
+def _bands(sigs: DataFrame, key: Callable[..., Column]) -> DataFrame:
+    """(doc_id, band, bk): banding is a narrow ×n_bands posexplode of
+    the wide signature row."""
+    return sigs.select("doc_id", F.posexplode(_band_keys(key)).alias("band", "bk"))
+
+
+def _band_candidates(sigs: DataFrame, key: Callable[..., Column]) -> DataFrame:
+    """Distinct (a_id < b_id) pairs agreeing on some band key — an
+    equi-join on (band, bk), so bucket sizes, not corpus², bound the
+    work."""
+    bands = _bands(sigs, key)
+    a = bands.select(F.col("doc_id").alias("a_id"), "band", "bk")
+    b = bands.select(F.col("doc_id").alias("b_id"), "band", "bk")
+    return (
+        a.join(b, ["band", "bk"])
+        .where(F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id")
+        .distinct()
+    )
+
+
+def _verify_jaccard(
+    cands: DataFrame, shingles: DataFrame, left: str = "a_id", right: str = "b_id"
+) -> DataFrame:
+    """Candidate-scoped exact Jaccard: (left, right, jaccard round 6)
+    for the ``cands`` pairs at or above MINHASH_JACCARD_THRESHOLD,
+    over ``shingles`` (doc_id, sh) WITH duplicates. Shingle SETS are
+    built only for candidate docs — semi-join first, then distinct —
+    so the distinct's shuffle is candidate-sized, not corpus-sized.
+    Precision is 1.0 by construction; the only way to miss a pair is
+    an LSH recall miss upstream. Unordered: callers that need order
+    add their own ``orderBy``."""
+    cand_ids = (
+        cands.select(F.col(left).alias("doc_id"))
+        .unionByName(cands.select(F.col(right).alias("doc_id")))
+        .distinct()
+    )
+    shd = track_persist(shingles.join(cand_ids, "doc_id", "left_semi").distinct())
+    sizes = shd.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    shared = (
+        cands.join(shd.withColumnRenamed("doc_id", left), left)
+        .join(shd.withColumnRenamed("doc_id", right), [right, "sh"])
+        .groupBy(left, right)
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    na = sizes.select(F.col("doc_id").alias(left), F.col("n_sh").alias("na"))
+    nb = sizes.select(F.col("doc_id").alias(right), F.col("n_sh").alias("nb"))
+    jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
+    return (
+        shared.join(na, left)
+        .join(nb, right)
+        .select(left, right, F.round(jac, 6).alias("jaccard"))
+        .where(F.col("jaccard") >= MINHASH_JACCARD_THRESHOLD)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Batch MinHash-LSH
+# ---------------------------------------------------------------------------
 
 
 def minhash_candidates(
     spark: SparkSession, sf_dir: str, shingles: DataFrame | None = None
 ) -> DataFrame:
     """Banded-LSH candidate pairs: docs agreeing on all BAND_ROWS
-    minhashes within any band. The band signature is xxhash64 over
-    the band's BAND_ROWS min-values — an 8-byte join key instead of
-    a ~80-byte concat_ws string, so the band self-join shuffles ~4×
-    fewer bytes (same trick as the shingle identities). A 64-bit
-    signature collision can only ADD a candidate pair, and every
-    candidate passes exact-Jaccard verification downstream. The
-    self-join is an equi-join on (band, signature) — bucket sizes,
-    not corpus², bound the work."""
+    minhashes within any band, the band key being xxhash64 over the
+    band's BAND_ROWS min-values (an 8-byte join key instead of a
+    ~80-byte concat_ws string). A 64-bit key collision can only ADD
+    a candidate pair, and every candidate passes exact-Jaccard
+    verification downstream."""
     if shingles is None:
         shingles = _shingles_raw(spark, sf_dir)  # min is dup-insensitive
-    sigs = _minhash_signatures(shingles)
-    n_bands = N_HASHES // BAND_ROWS
-    band_sigs = F.array(
-        *[
-            F.xxhash64(
-                *[F.col(f"m{b * BAND_ROWS + r}") for r in range(BAND_ROWS)]
-            )
-            for b in range(n_bands)
-        ]
-    )
-    # banding is a narrow ×n_bands explode of the wide signature row
-    # (seed order within each band preserved by construction)
-    bands = sigs.select(
-        "doc_id", F.posexplode(band_sigs).alias("band", "band_sig")
-    )
-    a = bands.select(
-        F.col("doc_id").alias("a_id"), "band", F.col("band_sig").alias("sig_a")
-    )
-    b = bands.select(
-        F.col("doc_id").alias("b_id"),
-        F.col("band").alias("band_b"),
-        F.col("band_sig").alias("sig_b"),
-    )
-    return (
-        a.join(
-            b,
-            (F.col("band") == F.col("band_b"))
-            & (F.col("sig_a") == F.col("sig_b"))
-            & (F.col("a_id") < F.col("b_id")),
-        )
-        .select("a_id", "b_id")
-        .distinct()
-    )
+    return _band_candidates(_minhash_signatures(shingles), F.xxhash64)
 
 
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -154,48 +318,13 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall/precision asserted in tests against llm.dedup_ngram-style
     exact ground truth on planted duplicates.
     """
-    # Signatures consume RAW shingles (min is duplicate-insensitive:
-    # no global distinct, no shuffle before the signature aggregate).
-    # The exact-Jaccard verify needs shingle SETS, but only for
-    # candidate docs — dedupe AFTER a semi-join down to candidates,
-    # so the distinct's shuffle is candidate-sized, not corpus-sized.
-    cands = track_persist(
-        minhash_candidates(spark, sf_dir, _shingles_raw(spark, sf_dir))
-    )
-    cand_ids = (
-        cands.select(F.col("a_id").alias("doc_id"))
-        .unionByName(cands.select(F.col("b_id").alias("doc_id")))
-        .distinct()
-    )
-    shingles = (
-        _shingles_raw(spark, sf_dir)
-        .join(cand_ids, "doc_id", "left_semi")  # Catalyst/AQE picks broadcast when it fits
-        .distinct()
-    )
-    shingles = track_persist(shingles)
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = shingles.select(F.col("doc_id").alias("a_id"), F.col("shingle").alias("sh"))
-    sb = shingles.select(F.col("doc_id").alias("b_id"), F.col("shingle").alias("sh"))
-    shared = (
-        cands.join(sa, "a_id")
-        .join(sb, ["b_id", "sh"])
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    na = sizes.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n_sh").alias("nb"))
-    return (
-        shared.join(na, "a_id")
-        .join(nb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            F.round(
-                F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")), 6
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= MINHASH_JACCARD_THRESHOLD)
-    )
+    # signatures consume RAW shingles (min is duplicate-insensitive:
+    # no global distinct before the signature aggregate); cands feeds
+    # both cand_ids projections and the verify join — persisted so
+    # the band join runs once
+    raw = _shingles_raw(spark, sf_dir)
+    cands = track_persist(minhash_candidates(spark, sf_dir, raw))
+    return _verify_jaccard(cands, raw)
 
 
 def _simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -486,65 +615,6 @@ ORDER BY 1, 2
 _SIMHASH_INT_SQL = _simhash_int_sql()
 
 
-def _md5_fold(c: F.Column, start: int, n_hex: int) -> F.Column:
-    """``n_hex`` hex digits of md5(c) starting at 1-based ``start``
-    as a non-negative long — the engine-portable integer-hash
-    foundation of the _int LSH twins: Spark computes it as
-    conv(substring(md5, start, n), 16, 10), DuckDB as a positional
-    hex-digit fold (``_md5_fold_sql``); bit-identical by
-    construction, pinned by
-    tests/test_dedup.py::test_md5_fold_engine_equivalence."""
-    return F.conv(F.substring(F.md5(c), start, n_hex), 16, 10).cast("long")
-
-
-def _md5_fold_sql(arg: str, start: int, n_hex: int) -> str:
-    return (
-        f"list_sum(list_transform(generate_series({start}, {start + n_hex - 1}), "
-        f"i -> (strpos('0123456789abcdef', substring(md5({arg}), i, 1)) - 1)::BIGINT "
-        f"* (1::BIGINT << (4 * ({start + n_hex - 1} - i)))))::BIGINT"
-    )
-
-
-def _string_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sh string) WITH duplicates: word-SHINGLE_K-shingles
-    as unit-separator-joined STRINGS (not xxhash64 identities) — the
-    engine-portable identity the integer-minhash twin hashes and
-    verifies on. Fully narrow, same shape as ``_shingles_raw``."""
-    docs = table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokens("text").alias("toks"))
-    arr = F.col("toks")
-    n_windows = F.size(arr) - (SHINGLE_K - 1)
-    sliding = F.when(n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    shingle_arr = F.transform(
-        sliding,
-        lambda i: F.concat_ws(
-            "\x1f", *[F.get(arr, i + j) for j in range(SHINGLE_K)]
-        ),
-    )
-    return toks.select("doc_id", F.explode(shingle_arr).alias("sh"))
-
-
-# Universal-hash constants for the integer-MinHash twin: 32 fixed
-# (a, b) pairs from random.Random(537) — a < 2^15, b < 2^31 keep
-# a*h + b < 2^63 for 48-bit h; P is the 2^61-1 Mersenne prime.
-_MINHASH_INT_P = (1 << 61) - 1
-
-
-def _minhash_int_ab() -> list[tuple[int, int]]:
-    import random
-
-    rng = random.Random(537)
-    return [
-        (rng.randrange(1, 1 << 15), rng.randrange(0, 1 << 31))
-        for _ in range(N_HASHES)
-    ]
-
-
-_MINHASH_INT_AB = _minhash_int_ab()
-
-
 def dedup_minhash_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORACLE-EXACT integer twin of the FULL MinHash-LSH pipeline —
     the last dedup strategy to get one (house integer-twin
@@ -575,96 +645,23 @@ def dedup_minhash_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape identical to ``dedup_minhash``: signatures are 32
     min-aggregate expressions over ONE (doc_id) hash aggregate (raw
     shingles — min is duplicate-insensitive, so no distinct before
-    the aggregate); candidates come from a band equi-join (struct of
-    the band's four mins as the key — bucket sizes bound the work);
-    the verify join deduplicates shingles only for candidate docs.
+    the aggregate); candidates come from a band equi-join (the md5
+    fold of the band's four mins as the key — bucket sizes bound the
+    work); the verify join deduplicates shingles only for candidate
+    docs. Every stage is a MinHash-LSH kernel call shared with the
+    streaming tiers.
     md5 costs ~3× xxhash64 per call, which is why the production
     operator keeps xxhash64 and THIS one exists for the oracle.
 
     Output: a_id, b_id, jaccard (round 6).
     """
     # ONE narrow persisted relation (doc_id, 48-bit shingle id) feeds
-    # both the signature aggregate and the verify: strings are folded
-    # to longs BEFORE anything shuffles (the string form measured
-    # ~3.5x slower end-to-end: every verify join moved ~30-byte keys)
-    hashed = track_persist(
-        _string_shingles(spark, sf_dir).select(
-            "doc_id", _md5_fold(F.col("sh"), 1, 12).alias("sh")
-        )
-    )
-    mins = [
-        F.min(
-            F.pmod(F.lit(a) * F.col("sh") + F.lit(b), F.lit(_MINHASH_INT_P))
-        ).alias(f"m{s}")
-        for s, (a, b) in enumerate(_MINHASH_INT_AB)
-    ]
-    sigs = hashed.groupBy("doc_id").agg(*mins)
-    n_bands = N_HASHES // BAND_ROWS
-    # band signature: md5-fold of the band's four mins — a single
-    # 48-bit long join key (the production operator's xxhash64 trick,
-    # in the engine-portable hash) instead of a 4-long struct; the
-    # ORACLE joins on the SAME folded key, so even a fold collision
-    # produces the identical candidate set on both engines
-    band_sigs = F.array(
-        *[
-            _md5_fold(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"m{b * BAND_ROWS + r}")
-                        for r in range(BAND_ROWS)
-                    ],
-                ),
-                1,
-                12,
-            )
-            for b in range(n_bands)
-        ]
-    )
-    bands = sigs.select("doc_id", F.posexplode(band_sigs).alias("band", "bs"))
-    a = bands.select(F.col("doc_id").alias("a_id"), "band", "bs")
-    b = bands.select(F.col("doc_id").alias("b_id"), "band", "bs")
-    # cands feeds FOUR consumers (both cand_ids projections, the
-    # verify join, and through shd's semi-join) — persist it like the
-    # production operator or the band join replays per consumer
-    cands = track_persist(
-        a.join(b, ["band", "bs"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
-    cand_ids = (
-        cands.select(F.col("a_id").alias("doc_id"))
-        .unionByName(cands.select(F.col("b_id").alias("doc_id")))
-        .distinct()
-    )
-    shd = track_persist(
-        hashed.join(cand_ids, "doc_id", "left_semi").distinct()
-    )
-    sizes = shd.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = shd.select(F.col("doc_id").alias("a_id"), "sh")
-    sb = shd.select(F.col("doc_id").alias("b_id"), "sh")
-    shared = (
-        cands.join(sa, "a_id")
-        .join(sb, ["b_id", "sh"])
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    na = sizes.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n_sh").alias("nb"))
-    return (
-        shared.join(na, "a_id")
-        .join(nb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            F.round(
-                F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")), 6
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= MINHASH_JACCARD_THRESHOLD)
-        .orderBy("a_id", "b_id")
-    )
+    # both the signature aggregate and the verify; cands feeds both
+    # cand_ids projections and the verify join — persisted so the
+    # band join runs once
+    hashed = track_persist(_folded_shingles(spark, sf_dir))
+    cands = track_persist(_band_candidates(_int_signatures(hashed), _md5_key))
+    return _verify_jaccard(cands, hashed).orderBy("a_id", "b_id")
 
 
 def _minhash_int_sql() -> str:
@@ -768,22 +765,6 @@ INCR_BATCH_MOD = 10  # doc_id % 10 == 0 -> the "new batch" (10%)
 _INCR_INDEX_CACHE: dict[tuple[str, str], str] = {}
 
 
-def _bands_of(sigs: DataFrame) -> DataFrame:
-    """(doc_id, band, sig): banded xxhash64 signatures from a wide
-    minhash-signature row — the shared kernel of the LSH index build
-    and the batch probe."""
-    n_bands = N_HASHES // BAND_ROWS
-    band_sigs = F.array(
-        *[
-            F.xxhash64(
-                *[F.col(f"m{b * BAND_ROWS + r}") for r in range(BAND_ROWS)]
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return sigs.select("doc_id", F.posexplode(band_sigs).alias("band", "sig"))
-
-
 def build_incremental_dedup_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the standing corpus's LSH band-signature index to
     scratch parquet (once per process per corpus) and return its
@@ -808,7 +789,7 @@ def build_incremental_dedup_index(spark: SparkSession, sf_dir: str) -> str:
     index_dir = _os.path.join(
         scratch_dir("incr_idx_"), f"idx_{_uuid.uuid4().hex[:8]}"
     )
-    _bands_of(_minhash_signatures(corpus)).write.parquet(index_dir)
+    _bands(_minhash_signatures(corpus), F.xxhash64).write.parquet(index_dir)
     _INCR_INDEX_CACHE[memo_key] = index_dir
     return index_dir
 
@@ -845,45 +826,19 @@ def incremental_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact verify (semi-join-bounded).
     raw = track_persist(_shingles_raw(spark, sf_dir))
 
-    probe = _bands_of(_minhash_signatures(raw.where(is_batch))).select(
-        F.col("doc_id").alias("new_id"), "band", "sig"
+    probe = _bands(_minhash_signatures(raw.where(is_batch)), F.xxhash64).select(
+        F.col("doc_id").alias("new_id"), "band", "bk"
     )
-    cands = (
+    cands = track_persist(
         probe.join(
-            index.select(F.col("doc_id").alias("corpus_id"), "band", "sig"),
-            ["band", "sig"],
+            index.select(F.col("doc_id").alias("corpus_id"), "band", "bk"),
+            ["band", "bk"],
         )
         .select("new_id", "corpus_id")
         .distinct()
     )
-    cands = track_persist(cands)
-    # exact verify on candidate docs only (semi-join-scoped sets)
-    cand_docs = (
-        cands.select(F.col("new_id").alias("doc_id"))
-        .unionByName(cands.select(F.col("corpus_id").alias("doc_id")))
-        .distinct()
-    )
-    sh = raw.join(cand_docs, "doc_id", "left_semi").distinct()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = sh.select(F.col("doc_id").alias("new_id"), F.col("shingle").alias("s"))
-    sb = sh.select(F.col("doc_id").alias("corpus_id"), F.col("shingle").alias("s"))
-    shared = (
-        cands.join(sa, "new_id")
-        .join(sb, ["corpus_id", "s"])
-        .groupBy("new_id", "corpus_id")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    na = sizes.select(F.col("doc_id").alias("new_id"), F.col("n_sh").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("corpus_id"), F.col("n_sh").alias("nb"))
-    jac = F.col("shared").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("shared")
-    ).cast("double")
-    return (
-        shared.join(na, "new_id")
-        .join(nb, "corpus_id")
-        .select("new_id", "corpus_id", F.round(jac, 6).alias("jaccard"))
-        .where(F.col("jaccard") >= MINHASH_JACCARD_THRESHOLD)
-        .orderBy("new_id", "corpus_id")
+    return _verify_jaccard(cands, raw, "new_id", "corpus_id").orderBy(
+        "new_id", "corpus_id"
     )
 
 
@@ -1002,32 +957,6 @@ PPJOIN_T_NUM, PPJOIN_T_DEN = 7, 10
 PPJOIN_THRESHOLD = PPJOIN_T_NUM / PPJOIN_T_DEN
 
 
-def _string_shingle_expr(arr):
-    """Array of word-SHINGLE_K string shingles (token0␟token1␟…) from
-    a token-array column — the shared narrow sliding-window kernel."""
-    n_windows = F.size(arr) - (SHINGLE_K - 1)
-    sliding = F.when(n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.transform(
-        sliding,
-        lambda i: F.concat_ws(
-            "\x1f", *[F.get(arr, i + j) for j in range(SHINGLE_K)]
-        ),
-    )
-
-
-def _string_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, shingle) distinct word-3-shingles carried as the
-    joined STRING (token0␟token1␟token2) — the oracle-parity twin of
-    ``_shingles``' 8-byte xxhash64 identities (DuckDB can rebuild the
-    string, not the hash). Same narrow sliding-window construction."""
-    docs = table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokens("text").alias("toks"))
-    shingle_arr = _string_shingle_expr(F.col("toks"))
-    return toks.select("doc_id", F.explode(shingle_arr).alias("sh")).distinct()
-
-
 def dedup_ppjoin(
     spark: SparkSession, sf_dir: str, posting: DataFrame | None = None
 ) -> DataFrame:
@@ -1078,7 +1007,7 @@ def dedup_ppjoin(
     surface it as a hash mismatch — the check, not a hazard.
     """
     if posting is None:
-        posting = _shingles(spark, sf_dir).withColumnRenamed("shingle", "sh")
+        posting = _shingles(spark, sf_dir)
     posting = track_persist(posting)
     from pyspark.sql.window import Window
 
@@ -1263,9 +1192,7 @@ def containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_ppjoin`` (internal identity only; one-sided prefix bound
     holds under any deterministic rarity order).
     """
-    posting = track_persist(
-        _shingles(spark, sf_dir).withColumnRenamed("shingle", "sh")
-    )
+    posting = track_persist(_shingles(spark, sf_dir))
     from pyspark.sql.window import Window
 
     # df and n as window counts inside the exchanges the rank window
@@ -1842,40 +1769,8 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats repeated): bucket, n_truth, n_hit, recall_micro, n_cand,
     n_cand_true, precision_micro.
     """
-    hashed = track_persist(
-        _string_shingles(spark, sf_dir).select(
-            "doc_id", _md5_fold(F.col("sh"), 1, 12).alias("sh")
-        )
-    )
-    mins = [
-        F.min(
-            F.pmod(F.lit(a) * F.col("sh") + F.lit(b), F.lit(_MINHASH_INT_P))
-        ).alias(f"m{s}")
-        for s, (a, b) in enumerate(_MINHASH_INT_AB)
-    ]
-    sigs = hashed.groupBy("doc_id").agg(*mins)
-    n_bands = N_HASHES // BAND_ROWS
-    band_sigs = F.array(
-        *[
-            _md5_fold(
-                F.concat_ws(
-                    ",",
-                    *[F.col(f"m{b * BAND_ROWS + r}") for r in range(BAND_ROWS)],
-                ),
-                1,
-                12,
-            )
-            for b in range(n_bands)
-        ]
-    )
-    bands = sigs.select("doc_id", F.posexplode(band_sigs).alias("band", "bs"))
-    cands = track_persist(
-        bands.select(F.col("doc_id").alias("a_id"), "band", "bs")
-        .join(bands.select(F.col("doc_id").alias("b_id"), "band", "bs"), ["band", "bs"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
+    hashed = track_persist(_folded_shingles(spark, sf_dir))
+    cands = track_persist(_band_candidates(_int_signatures(hashed), _md5_key))
     shd = track_persist(hashed.distinct())
     sizes = shd.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     sa = shd.select(F.col("doc_id").alias("a_id"), "sh")

@@ -17,6 +17,7 @@ Scale notes per operator are in docstrings; the common rules:
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,7 +25,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import table
 from ..session import track_persist
-from ..functions.text import tokens
+from ..functions.text import token_windows, tokens
 from ..functions.vectors import cosine_similarity
 from ..scratch import scratch_dir
 
@@ -2375,14 +2376,7 @@ def _bigram_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlined into lambda bodies."""
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("toks"))
-    arr = F.col("toks")
-    sliding = F.when(
-        F.size(arr) >= 2, F.sequence(F.lit(0), F.size(arr) - 2)
-    ).otherwise(F.array().cast("array<int>"))
-    bigram_arr = F.transform(
-        sliding,
-        lambda i: F.concat_ws(" ", F.get(arr, i), F.get(arr, i + 1)),
-    )
+    bigram_arr = token_windows(F.col("toks"), 2, partial(F.concat_ws, " "))
     return toks.select("doc_id", F.explode(bigram_arr).alias("bigram"))
 
 
@@ -2565,15 +2559,7 @@ def repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("ts"))
-    arr = F.col("ts")
-    n_windows = F.size(arr) - (SHINGLE_K_REP - 1)
-    sliding = F.when(
-        n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    shingle_arr = F.transform(
-        sliding,
-        lambda i: F.xxhash64(*[F.get(arr, i + j) for j in range(SHINGLE_K_REP)]),
-    )
+    shingle_arr = token_windows(F.col("ts"), SHINGLE_K_REP, F.xxhash64)
     total = F.size(shingle_arr).cast("long")
     distinct = F.size(F.array_distinct(shingle_arr)).cast("long")
     ratio = F.when(total > 0, F.round((total - distinct) / total, 6)).otherwise(
@@ -3612,21 +3598,6 @@ def _ann_band_bits(n: int) -> int:
     )
 
 
-def _doc_shingle_arr(k: int) -> Column:
-    """Sliding k-gram xxhash64 identities over a token array column
-    named ``ts`` — narrow, no shuffle (same construction as
-    dedup._shingles_raw, parameterized by k)."""
-    arr = F.col("ts")
-    n_windows = F.size(arr) - (k - 1)
-    sliding = F.when(n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.transform(
-        sliding,
-        lambda i: F.xxhash64(*[F.get(arr, i + j) for j in range(k)]),
-    )
-
-
 def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing any
     word-``DECON_K``-gram with a held-out eval set (here the
@@ -3645,9 +3616,8 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("ts"))
-    sh = toks.select(
-        "doc_id", F.explode(_doc_shingle_arr(DECON_K)).alias("sh")
-    ).distinct()
+    grams = token_windows(F.col("ts"), DECON_K, F.xxhash64)
+    sh = toks.select("doc_id", F.explode(grams).alias("sh")).distinct()
     is_eval = F.col("doc_id") % DECON_EVAL_MOD == 0
     train_sh = sh.filter(~is_eval)
     eval_sh = sh.filter(is_eval).select("sh").distinct()
@@ -3719,9 +3689,8 @@ def dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("ts"))
-    win = toks.select(
-        "doc_id", F.explode(_doc_shingle_arr(DUP_SPAN_K)).alias("sh")
-    )
+    spans = token_windows(F.col("ts"), DUP_SPAN_K, F.xxhash64)
+    win = toks.select("doc_id", F.explode(spans).alias("sh"))
     per = win.groupBy("doc_id", "sh").agg(F.count(F.lit(1)).alias("c"))
     tot = per.groupBy("sh").agg(F.sum("c").alias("occ"))
     return (
@@ -3777,9 +3746,8 @@ def remove_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("ts"))
-    win = toks.select(
-        "doc_id", F.posexplode(_doc_shingle_arr(DUP_SPAN_K)).alias("i", "sh")
-    )
+    spans = token_windows(F.col("ts"), DUP_SPAN_K, F.xxhash64)
+    win = toks.select("doc_id", F.posexplode(spans).alias("i", "sh"))
     keep = win.groupBy("sh").agg(F.min(F.struct("doc_id", "i")).alias("k"))
     dup_wins = (
         win.join(keep, "sh")

@@ -972,6 +972,7 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from ..functions.text import tokens
+    from ..operators.dedup import _shingle_strs
     from ..operators.llm import DECON_EVAL_MOD, DECON_K
 
     work = scratch_dir("stream_dc_")
@@ -980,26 +981,12 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     _copy_table_files(sf_dir, "documents", src)
     schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
 
-    def gram_arr() -> F.Column:
-        arr = F.col("ts")
-        n_win = F.size(arr) - (DECON_K - 1)
-        sliding = F.when(
-            n_win >= 1, F.sequence(F.lit(0), n_win - 1)
-        ).otherwise(F.array().cast("array<int>"))
-        return F.array_distinct(
-            F.transform(
-                sliding,
-                lambda i: F.concat_ws(
-                    "\x1f", *[F.get(arr, i + j) for j in range(DECON_K)]
-                ),
-            )
-        )
-
+    grams = F.array_distinct(_shingle_strs(F.col("ts"), DECON_K))
     ev_docs = (
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         .where(F.col("doc_id") % DECON_EVAL_MOD == 0)
         .select("doc_id", tokens("text").alias("ts"))
-        .select(F.explode(gram_arr()).alias("sh"))
+        .select(F.explode(grams).alias("sh"))
         .distinct()
     )
     ev_row = ev_docs.agg(F.collect_list("sh").alias("evs"))
@@ -1007,7 +994,7 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (
         docs.where(F.col("doc_id") % DECON_EVAL_MOD != 0)
         .select("doc_id", tokens("text").alias("ts"))
-        .select("doc_id", gram_arr().alias("grams"))
+        .select("doc_id", grams.alias("grams"))
         .crossJoin(F.broadcast(ev_row))
         .select(
             "doc_id",
@@ -1263,59 +1250,14 @@ def stream_dedup_docs_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid
 
-    from ..functions.text import tokens
-    from ..operators.dedup import (
-        _MINHASH_INT_AB,
-        _MINHASH_INT_P,
-        SHINGLE_K,
-        _md5_fold,
-    )
-
     work = scratch_dir("stream_mh_")
     src = os.path.join(work, "in")
     os.makedirs(src, exist_ok=True)
     _copy_table_files(sf_dir, "documents", src)
     schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
     docs = spark.readStream.schema(schema).parquet(src)
-    toks = docs.select("doc_id", tokens("text").alias("toks"))
-    arr = F.col("toks")
-    n_windows = F.size(arr) - (SHINGLE_K - 1)
-    sliding = F.when(
-        n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    shingle_arr = F.transform(
-        sliding,
-        lambda i: F.concat_ws(
-            "\x1f", *[F.get(arr, i + j) for j in range(SHINGLE_K)]
-        ),
-    )
-    folds = F.transform(
-        shingle_arr,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("long"),
-    )
-    # filter on the TOKEN count (>= 1 shingle window ⟺ >= SHINGLE_K
-    # tokens) BEFORE projecting the folds: a post-projection
-    # size(hs) >= 1 filter gets pushed below the projection with the
-    # whole md5-fold pipeline substituted in — and the tokenize
-    # re-evaluates inside the per-element lambdas (measured 0.4 s →
-    # 7.5 s on 10k docs at sf0.1)
-    hashed = toks.where(F.size("toks") >= SHINGLE_K).select(
-        "doc_id", folds.alias("hs")
-    )
-    mins = [
-        F.array_min(
-            F.expr(f"transform(hs, h -> pmod({a} * h + {b}, {_MINHASH_INT_P}))")
-        ).alias(f"m{s}")
-        for s, (a, b) in enumerate(_MINHASH_INT_AB)
-    ]
-    sigs = hashed.select("doc_id", *mins)
-    sig = _md5_fold(
-        F.concat_ws(",", *[F.col(f"m{s}") for s in range(len(_MINHASH_INT_AB))]),
-        1,
-        12,
-    )
     out = (
-        sigs.select("doc_id", sig.alias("sig"))
+        _lsh_signature_keys(docs)
         .groupBy("sig")
         .agg(
             F.min("doc_id").alias("keeper_doc_id"),
@@ -1394,62 +1336,14 @@ def stream_dedup_docs_minhash_bounded(
     """
     import uuid
 
-    from ..functions.text import tokens
-    from ..operators.dedup import (
-        _MINHASH_INT_AB,
-        _MINHASH_INT_P,
-        SHINGLE_K,
-        _md5_fold,
-    )
-
     work = scratch_dir("stream_mhb_")
     src = os.path.join(work, "in")
     os.makedirs(src, exist_ok=True)
     _copy_table_files(sf_dir, "documents", src)
     schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
     docs = spark.readStream.schema(schema).parquet(src)
-    toks = docs.select(
-        "doc_id",
-        F.timestamp_seconds(F.lit(_LSH_EV_EPOCH) + F.col("doc_id")).alias(
-            "ev"
-        ),
-        tokens("text").alias("toks"),
-    )
-    arr = F.col("toks")
-    n_windows = F.size(arr) - (SHINGLE_K - 1)
-    sliding = F.when(
-        n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    shingle_arr = F.transform(
-        sliding,
-        lambda i: F.concat_ws(
-            "\x1f", *[F.get(arr, i + j) for j in range(SHINGLE_K)]
-        ),
-    )
-    folds = F.transform(
-        shingle_arr,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("long"),
-    )
-    # pre-filter on token count, not size(hs) — see the
-    # stream_dedup_docs_minhash comment (pushdown re-inlines the fold
-    # pipeline into per-element lambdas otherwise)
-    hashed = toks.where(F.size("toks") >= SHINGLE_K).select(
-        "doc_id", "ev", folds.alias("hs")
-    )
-    mins = [
-        F.array_min(
-            F.expr(f"transform(hs, h -> pmod({a} * h + {b}, {_MINHASH_INT_P}))")
-        ).alias(f"m{s}")
-        for s, (a, b) in enumerate(_MINHASH_INT_AB)
-    ]
-    sigs = hashed.select("doc_id", "ev", *mins)
-    sig = _md5_fold(
-        F.concat_ws(",", *[F.col(f"m{s}") for s in range(len(_MINHASH_INT_AB))]),
-        1,
-        12,
-    )
     survivors = dedup_stream(
-        sigs.select("doc_id", "ev", sig.alias("sig")),
+        _lsh_signature_keys(docs),
         key="sig",
         ts_col="ev",
         watermark=LSH_WATERMARK,
@@ -1518,33 +1412,18 @@ _LSH_EV_EPOCH = 1_704_067_200  # 2024-01-01T00:00:00Z
 
 
 def _lsh_hashed(docs: DataFrame) -> DataFrame:
-    """Shared signature front of the streaming LSH tiers:
-    ``(doc_id, ev, hs)`` where ``hs`` is the per-window shingle
-    md5-fold array (the ``dedup_minhash_int`` hash family computed
-    the ``stream_dedup_docs_minhash`` way — no explode/shuffle).
-    Works on a stream OR a static read of the same corpus — the
-    exact tier's side relation derives from this same pipeline so
-    the verify sets are bit-identical to what the band rows hashed.
-    Docs under SHINGLE_K tokens have no shingles and pass through
-    unexamined (never banded), as in every tier."""
+    """Shingle front of the streaming MinHash tiers: ``(doc_id, ev,
+    hs)`` where ``hs`` is the per-row array of md5-fold shingle
+    identities (``dedup._shingle_folds`` — the ``dedup_minhash_int``
+    identities, no explode/shuffle). Works on a stream OR a static
+    read of the same corpus — the exact tier's side relation derives
+    from this same pipeline so the verify sets are bit-identical to
+    what the band rows hashed. Docs under SHINGLE_K tokens have no
+    shingles and pass through unexamined (never signed), as in every
+    tier."""
     from ..functions.text import tokens
-    from ..operators.dedup import SHINGLE_K
+    from ..operators.dedup import SHINGLE_K, _shingle_folds
 
-    arr = F.col("toks")
-    n_windows = F.size(arr) - (SHINGLE_K - 1)
-    sliding = F.when(
-        n_windows >= 1, F.sequence(F.lit(0), n_windows - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    shingle_arr = F.transform(
-        sliding,
-        lambda i: F.concat_ws(
-            "\x1f", *[F.get(arr, i + j) for j in range(SHINGLE_K)]
-        ),
-    )
-    folds = F.transform(
-        shingle_arr,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("long"),
-    )
     return (
         docs.select(
             "doc_id",
@@ -1555,10 +1434,36 @@ def _lsh_hashed(docs: DataFrame) -> DataFrame:
         )
         # pre-filter on token count, not size(hs): pushing a
         # size(hs) >= 1 filter below the fold projection re-inlines
-        # the tokenize into the per-element lambdas (see
-        # stream_dedup_docs_minhash; measured 16 s → <1 s at sf0.1)
+        # the tokenize into the per-element lambdas (measured 0.4 s →
+        # 7.5 s on 10k docs, 16 s → <1 s for the LSH drain at sf0.1)
         .where(F.size("toks") >= SHINGLE_K)
-        .select("doc_id", "ev", folds.alias("hs"))
+        .select("doc_id", "ev", _shingle_folds(F.col("toks")).alias("hs"))
+    )
+
+
+def _lsh_signatures(docs: DataFrame) -> DataFrame:
+    """``(doc_id, ev, m0..m31)``: the integer-MinHash signature as a
+    PURE NARROW per-row expression — 32 ``array_min(transform(hs,
+    …))`` over the fold array (``dedup._minhash_int_mins``, the batch
+    twin's per-seed scramble). A stream cannot aggregate without
+    state, and the per-row form shuffles nothing."""
+    from ..operators.dedup import _minhash_int_mins
+
+    return _lsh_hashed(docs).select(
+        "doc_id",
+        "ev",
+        *_minhash_int_mins(lambda f: F.array_min(F.transform("hs", f))),
+    )
+
+
+def _lsh_signature_keys(docs: DataFrame) -> DataFrame:
+    """``(doc_id, ev, sig)``: each doc's whole 32-min signature folded
+    to one md5 long (``dedup._md5_key``) — the key the signature
+    dedup tiers collapse on."""
+    from ..operators.dedup import _md5_key, _sig_cols
+
+    return _lsh_signatures(docs).select(
+        "doc_id", "ev", _md5_key(*_sig_cols()).alias("sig")
     )
 
 
@@ -1589,13 +1494,10 @@ def _lsh_band_rows(
     ``sig`` (the 32 mins) IN state for matching-min-fraction verify
     — the tier for ingest paths with no doc-store dependency.
 
-    The 32-seed integer MinHash signature is the
-    ``dedup_minhash_int`` hash family computed the
-    ``stream_dedup_docs_minhash`` way (shingle array → md5-fold array
-    → 32 array_min's, no explode/shuffle); the 8 band keys are
-    md5-folds of each band's four mins (the batch twin's single-long
-    band key). Event time is synthesized from doc_id (deterministic
-    fixtures); a real deploy uses ingest time.
+    The signature is ``_lsh_signatures``; the 8 band keys are the
+    batch twin's md5-folded band keys (``dedup._band_keys`` with
+    ``_md5_key``). Event time is synthesized from doc_id
+    (deterministic fixtures); a real deploy uses ingest time.
 
     State honesty: the exact tier used to buffer 8 band rows × the
     full shd array per doc — 8× state amplification on the largest
@@ -1603,46 +1505,17 @@ def _lsh_band_rows(
     band rows cut that to 8 × ~32 bytes per doc; the price moved to
     one static-side lookup join per emitted candidate, which is the
     right trade at any corpus size (candidates ≪ band rows)."""
-    from ..operators.dedup import (
-        _MINHASH_INT_AB,
-        _MINHASH_INT_P,
-        BAND_ROWS,
-        N_HASHES,
-        _md5_fold,
-    )
+    from ..operators.dedup import _band_keys, _md5_key, _sig_cols
 
-    hashed = _lsh_hashed(docs)
-    mins = [
-        F.array_min(
-            F.expr(f"transform(hs, h -> pmod({a} * h + {b}, {_MINHASH_INT_P}))")
-        ).alias(f"m{s}")
-        for s, (a, b) in enumerate(_MINHASH_INT_AB)
-    ]
-    sigs = hashed.select("doc_id", "ev", *mins)
-    band_keys = F.array(
-        *[
-            _md5_fold(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"m{b * BAND_ROWS + r}")
-                        for r in range(BAND_ROWS)
-                    ],
-                ),
-                1,
-                12,
-            )
-            for b in range(N_HASHES // BAND_ROWS)
-        ]
-    )
     if payload == "estimated":
-        carry = [
-            F.array(*[F.col(f"m{s}") for s in range(N_HASHES)]).alias("sig")
-        ]
+        carry = [F.array(*_sig_cols()).alias("sig")]
     else:  # "keys": payload-free routing rows for the exact tier
         carry = []
-    return sigs.select(
-        "doc_id", "ev", *carry, F.posexplode(band_keys).alias("band", "bk")
+    return _lsh_signatures(docs).select(
+        "doc_id",
+        "ev",
+        *carry,
+        F.posexplode(_band_keys(_md5_key)).alias("band", "bk"),
     ).withWatermark("ev", watermark)
 
 
@@ -1676,7 +1549,10 @@ def dedup_docs_lsh_stream(
     ×8 band rows — 8× state amplification on the largest column);
     the witness stream is candidates only, so the lookup joins touch
     candidates ≪ band rows. Every candidate's docs have arrived by
-    emission time, so the inner attach joins lose no rows.
+    emission time, so ``shd_of`` must cover them: the attach joins
+    are LEFT joins and a witness whose doc is missing from ``shd_of``
+    fails the query with an error naming that doc_id, instead of
+    dropping the pair.
 
     State bound — IMPLEMENTED, not documented-away: the join
     condition bounds each side's event time against the other
@@ -1710,17 +1586,28 @@ def dedup_docs_lsh_stream(
         & (b["b_ev"] <= a["a_ev"] + F.expr(f"INTERVAL {horizon_s} SECONDS")),
     )
     wit = joined.select("a_id", "b_id", "band")
-    wit = wit.join(
-        shd_of.select(
-            F.col("doc_id").alias("a_id"), F.col("shd").alias("a_shd")
-        ),
-        "a_id",
-    ).join(
-        shd_of.select(
-            F.col("doc_id").alias("b_id"), F.col("shd").alias("b_shd")
-        ),
-        "b_id",
-    )
+    for side in ("a", "b"):
+        # a LEFT join plus raise_error, not an inner join: a banded doc
+        # missing from shd_of fails the query instead of silently
+        # losing its pairs
+        doc_id = f"{side}_id"
+        missing = F.raise_error(
+            F.concat(
+                F.lit("shd_of does not cover banded doc_id "),
+                F.col(doc_id).cast("string"),
+            )
+        )
+        wit = (
+            wit.join(
+                shd_of.select(
+                    F.col("doc_id").alias(doc_id), F.col("shd").alias("_shd")
+                ),
+                doc_id,
+                "left",
+            )
+            .withColumn(f"{side}_shd", F.coalesce("_shd", missing))
+            .drop("_shd")
+        )
     shared = F.size(F.array_intersect("a_shd", "b_shd"))
     union = F.size("a_shd") + F.size("b_shd") - shared
     from ..operators.dedup import MINHASH_JACCARD_THRESHOLD

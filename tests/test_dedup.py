@@ -41,8 +41,8 @@ def _exact_pairs(spark, sf_dir, threshold):
     """Ground truth: exact shingle-Jaccard over ALL pairs."""
     sh = dedup._shingles(spark, sf_dir)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col("doc_id").alias("a_id"), "shingle")
-    b = sh.select(F.col("doc_id").alias("b_id"), "shingle")
+    a = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("shingle"))
+    b = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("shingle"))
     shared = (
         a.join(b, ["shingle"])
         .filter(F.col("a_id") < F.col("b_id"))
@@ -309,7 +309,7 @@ def test_ppjoin_prefix_excludes_hot_shingles(spark):
         [(k, v, "en", "t", len(v)) for k, v in corpus],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.parquet(os.path.join(d, "documents.parquet"))
-    posting = dedup._string_shingles(spark, d)
+    posting = dedup._string_shingles(spark, d).distinct()
     freq = posting.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     sizes = posting.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     ranked = (

@@ -1080,6 +1080,33 @@ def test_dedup_recall_report_candidates_below_verify(spark):
     assert P.count_nodes(plan, "HashAggregate") >= 4
 
 
+def test_int_minhash_folds_string_shingles_without_distinct(spark):
+    """The integer-MinHash twins fold the RAW exploded string
+    shingles to md5 longs: the signature min is duplicate-insensitive
+    and the verify deduplicates candidate docs only, so no aggregate
+    may group on the string-shingle column before the fold (a
+    shadowing helper once added a corpus-wide string distinct
+    here)."""
+    import re
+
+    from cs537_spring2021_p3a_mapreduce_spark.operators import dedup
+
+    for fn in (dedup.dedup_minhash_int, dedup.dedup_recall_report):
+        plan = P.plan(fn(spark, SF_SMOKE), "simple")
+        strings = set(
+            re.findall(
+                r"Generate explode\(.*concat_ws.*\), \[[^\]]*\], "
+                r"(?:true|false), \[(\w+#\d+)\]",
+                plan,
+            )
+        )
+        assert strings, "expected the string-shingle explode in the plan"
+        keys = re.findall(r"HashAggregate\(keys=\[([^\]]*)\]", plan)
+        assert keys
+        grouped = {k for ks in keys for k in ks.split(", ")}
+        assert not strings & grouped, (fn.__name__, strings & grouped)
+
+
 def test_holt_winters_fold_on_monthly_aggregate(spark):
     """The recurrence folds per-segment ordered ARRAYS built from the
     monthly hash aggregate — no corpus-sized window, no cartesian

@@ -718,37 +718,17 @@ def test_stream_dedup_docs_lsh_matches_batch_banding(spark):
     assert len(got) > 0  # fixtures contain near-dups; parity isn't vacuous
 
 
-def test_stream_dedup_docs_lsh_horizon_and_state_eviction(spark, tmp_path):
-    """The IMPLEMENTED state bound, probed on a staged multi-batch
-    drain: with horizon=1000 s and watermark=100 s, a near-dup 300 s
-    after its original is flagged, an equally-near dup 5000 s after
-    is NOT (out of horizon — the nightly batch tier's job), and the
-    state-operator metrics show rows actually LEAVING the join state
-    once the watermark passes their horizon (eviction, not just a
-    docstring)."""
+def _stage_docs(spark, tmp_path, rows):
+    """Stage one parquet file per ``(doc_id, text)`` row, mtime-ordered,
+    so a ``maxFilesPerTrigger=1`` stream drains them as one micro-batch
+    each in row order. Returns ``(reader, src)``: a factory of fresh
+    document streams over the staged dir, and the dir itself."""
     import glob
     import os
     import shutil
-    import uuid
 
-    from cs537_spring2021_p3a_mapreduce_spark.streaming import (
-        _lsh_band_rows,
-        _lsh_shd_lookup,
-        dedup_docs_lsh_stream,
-        run_to_memory,
-    )
-
-    base = " ".join(f"w{i}" for i in range(20))
-    rows = [
-        (0, base),                 # original
-        (300, base + " extra"),    # near-dup, in horizon (J = 18/19)
-        (5000, base + " other"),   # near-dup of 0 AND 300, out of horizon
-        (6000, "z0 z1 z2 z3 z4 z5 z6 z7 z8 z9"),  # unrelated; advances wm
-    ]
     src = tmp_path / "in"
     src.mkdir()
-    # one file per doc, mtime-ordered so maxFilesPerTrigger=1 drains
-    # them as four micro-batches in doc_id (= event-time) order
     for i, (doc_id, text) in enumerate(rows):
         d = tmp_path / f"doc{i}"
         spark.createDataFrame(
@@ -766,8 +746,36 @@ def test_stream_dedup_docs_lsh_horizon_and_state_eviction(spark, tmp_path):
             .parquet(str(src))
         )
 
+    return reader, str(src)
+
+
+def test_stream_dedup_docs_lsh_horizon_and_state_eviction(spark, tmp_path):
+    """The IMPLEMENTED state bound, probed on a staged multi-batch
+    drain: with horizon=1000 s and watermark=100 s, a near-dup 300 s
+    after its original is flagged, an equally-near dup 5000 s after
+    is NOT (out of horizon — the nightly batch tier's job), and the
+    state-operator metrics show rows actually LEAVING the join state
+    once the watermark passes their horizon (eviction, not just a
+    docstring)."""
+    import uuid
+
+    from cs537_spring2021_p3a_mapreduce_spark.streaming import (
+        _lsh_band_rows,
+        _lsh_shd_lookup,
+        dedup_docs_lsh_stream,
+        run_to_memory,
+    )
+
+    base = " ".join(f"w{i}" for i in range(20))
+    # drained as four micro-batches in doc_id (= event-time) order
+    reader, src = _stage_docs(spark, tmp_path, [
+        (0, base),                 # original
+        (300, base + " extra"),    # near-dup, in horizon (J = 18/19)
+        (5000, base + " other"),   # near-dup of 0 AND 300, out of horizon
+        (6000, "z0 z1 z2 z3 z4 z5 z6 z7 z8 z9"),  # unrelated; advances wm
+    ])
     shd_of = _lsh_shd_lookup(
-        spark.read.schema("doc_id long, text string").parquet(str(src))
+        spark.read.schema("doc_id long, text string").parquet(src)
     )
     pairs = dedup_docs_lsh_stream(
         _lsh_band_rows(reader(), "100 seconds"),
@@ -795,6 +803,48 @@ def test_stream_dedup_docs_lsh_horizon_and_state_eviction(spark, tmp_path):
         for op in p.get("stateOperators", [])
     )
     assert removed > 0
+
+
+def test_stream_dedup_docs_lsh_fails_loudly_on_uncovered_doc(spark, tmp_path):
+    """The exact tier's verify side relation must cover every banded
+    doc: on a staged two-batch drain whose shd_of omits the later
+    near-dup, the query fails with an error naming that doc_id,
+    instead of an inner attach join silently dropping the pair."""
+    import uuid
+
+    import pytest
+
+    from cs537_spring2021_p3a_mapreduce_spark.streaming import (
+        _lsh_band_rows,
+        _lsh_shd_lookup,
+        dedup_docs_lsh_stream,
+        run_to_memory,
+    )
+
+    base = " ".join(f"w{i}" for i in range(20))
+    reader, src = _stage_docs(
+        spark, tmp_path, [(0, base), (300, base + " extra")]  # J = 18/19
+    )
+    shd_of = _lsh_shd_lookup(
+        spark.read.schema("doc_id long, text string")
+        .parquet(src)
+        .where(F.col("doc_id") != 300)
+    )
+    pairs = dedup_docs_lsh_stream(
+        _lsh_band_rows(reader(), "100 seconds"),
+        _lsh_band_rows(reader(), "100 seconds"),
+        shd_of,
+        watermark="100 seconds",
+        horizon_s=1000,
+    )
+    with pytest.raises(Exception, match="shd_of does not cover banded doc_id 300"):
+        run_to_memory(
+            pairs,
+            f"lsh_uncovered_{uuid.uuid4().hex[:8]}",
+            str(tmp_path / "ckpt"),
+            "append",
+            shuffle_partitions=4,
+        )
 
 
 def test_lsh_estimated_tier_state_drop(spark, tmp_path):
@@ -905,34 +955,23 @@ def test_stream_ivf_assign_partitions_whole_corpus(spark):
 
 def test_bounded_minhash_dedup_horizon_reemission_and_eviction(spark, tmp_path):
     """The bounded signature dedup's state contract, on a staged
-    multi-batch drain of the SAME composition the registered entry
-    ships (per-row signature → dedup_stream on sig): an in-horizon
+    multi-batch drain of the SAME stream the registered entry ships
+    (``_lsh_signature_keys`` → ``dedup_stream`` on sig), with a short
+    watermark: an in-horizon
     signature-identical copy is dropped, a copy arriving AFTER the
     watermark passed the first copy's state re-emits its signature
     (the documented horizon bound — the batch tier's job), and the
     dedup state-store metrics show rows leaving."""
-    import glob
-    import os
-    import shutil
     import uuid
 
-    from pyspark.sql import functions as F
-
-    from cs537_spring2021_p3a_mapreduce_spark.functions.text import tokens
-    from cs537_spring2021_p3a_mapreduce_spark.operators.dedup import (
-        _MINHASH_INT_AB,
-        _MINHASH_INT_P,
-        SHINGLE_K,
-        _md5_fold,
-    )
     from cs537_spring2021_p3a_mapreduce_spark.streaming import (
-        _LSH_EV_EPOCH,
+        _lsh_signature_keys,
         dedup_stream,
         run_to_memory,
     )
 
     body = "alpha beta gamma delta epsilon zeta eta theta"
-    rows = [
+    reader, _ = _stage_docs(spark, tmp_path, [
         (0, body),                       # original
         (100, body),                     # in-horizon copy: dropped
         (1_000_000, "z1 z2 z3 z4 z5"),   # filler: advances watermark
@@ -941,60 +980,13 @@ def test_bounded_minhash_dedup_horizon_reemission_and_eviction(spark, tmp_path):
         # advanced it — the original's state leaves after this one
         (1_500_000, "y1 y2 y3 y4 y5"),
         (2_000_000, body),               # post-horizon copy: re-emits
-    ]
-    src = tmp_path / "in"
-    src.mkdir()
-    for i, (doc_id, text) in enumerate(rows):
-        d = tmp_path / f"doc{i}"
-        spark.createDataFrame(
-            [(doc_id, text)], "doc_id long, text string"
-        ).coalesce(1).write.parquet(str(d))
-        part = glob.glob(str(d / "part-*.parquet"))[0]
-        dst = str(src / f"part-{i}.parquet")
-        shutil.copy(part, dst)
-        os.utime(dst, (1_000_000_000 + i,) * 2)
-
-    docs = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
+    ])
+    survivors = dedup_stream(
+        _lsh_signature_keys(reader()),
+        key="sig",
+        ts_col="ev",
+        watermark="100 seconds",
     )
-    toks = docs.select(
-        "doc_id",
-        F.timestamp_seconds(F.lit(_LSH_EV_EPOCH) + F.col("doc_id")).alias("ev"),
-        tokens("text").alias("toks"),
-    )
-    arr = F.col("toks")
-    nw = F.size(arr) - (SHINGLE_K - 1)
-    sh = F.transform(
-        F.when(nw >= 1, F.sequence(F.lit(0), nw - 1)).otherwise(
-            F.array().cast("array<int>")
-        ),
-        lambda i: F.concat_ws(
-            "\x1f", *[F.get(arr, i + j) for j in range(SHINGLE_K)]
-        ),
-    )
-    folds = F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("long")
-    )
-    hashed = toks.select("doc_id", "ev", folds.alias("hs")).where(
-        F.size("hs") >= 1
-    )
-    mins = [
-        F.array_min(
-            F.expr(f"transform(hs, h -> pmod({a} * h + {b}, {_MINHASH_INT_P}))")
-        ).alias(f"m{s}")
-        for s, (a, b) in enumerate(_MINHASH_INT_AB)
-    ]
-    sig = _md5_fold(
-        F.concat_ws(",", *[F.col(f"m{s}") for s in range(len(_MINHASH_INT_AB))]),
-        1,
-        12,
-    )
-    sigs = hashed.select("doc_id", "ev", *mins).select(
-        "doc_id", "ev", sig.alias("sig")
-    )
-    survivors = dedup_stream(sigs, key="sig", ts_col="ev", watermark="100 seconds")
     name = f"mhb_evict_{uuid.uuid4().hex[:8]}"
     q = run_to_memory(
         survivors.select("doc_id", "sig"),
