@@ -43,7 +43,9 @@ def derive_n_salts(big: DataFrame, key: str | Column) -> int:
     import math
 
     spark = big.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    # the width batch joins are planned with: AQE's initial partition
+    # number under get_spark, the raw shuffle.partitions otherwise
+    n_part = spark._jsparkSession.sessionState().conf().numShufflePartitions()
     keyed = big.select(F.col(key).cast("string").alias("k") if isinstance(key, str) else key.cast("string").alias("k"))
 
     def sketch(batches):

@@ -6,18 +6,27 @@ main.c:64) and keeps every kv pair resident in memory with no spill
 shuffle partitions, AQE coalescing/skew-splitting, and spillable
 shuffle state are all engine concerns. These defaults are what we
 would ship to a 1000-executor cluster, minus the local[] master.
+
+Two shuffle widths: batch plans start at AQE's initial partition
+number (32) and AQE coalesces from there; streaming state stores and
+``foreachBatch`` frames (AQE off) shuffle at
+``spark.sql.shuffle.partitions``, which ``get_spark`` sets to the
+cores the session got.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
 # Defaults chosen for the 100 TB design point, not the local test rig:
 # - AQE on: runtime partition coalescing, skew-join splitting, and
 #   dynamic broadcast-join demotion/promotion replace any hand tuning.
-# - shuffle.partitions is only the pre-AQE upper bound; AQE coalesces.
+# - Batch shuffles start 32 wide (initialPartitionNum); AQE coalesces.
+#   Streaming state and foreachBatch frames get no AQE and shuffle at
+#   shuffle.partitions, which get_spark derives from the cores.
 # - Arrow on: every pandas_udf / applyInPandas crossing is batched.
 # - UTC session timezone: deterministic event-time semantics and
 #   parity with the DuckDB oracle's naive timestamps.
@@ -31,7 +40,7 @@ _SCALE_CONFS: dict[str, str] = {
     # allow custom Python data sources to absorb filters (linescan grep)
     "spark.sql.python.filterPushdown.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    "spark.sql.shuffle.partitions": "32",
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "32",
     # The events fixture stores TIMESTAMP(NANOS) parquet, which Spark
     # has no native type for; read as epoch-nanos long and convert in
     # the catalog (catalog.table) with integer µs truncation — the
@@ -60,7 +69,11 @@ def get_spark(app_name: str = "cs537-p3a-spark", master: str | None = None) -> S
         builder = builder.master(master)
     for k, v in _SCALE_CONFS.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # A stream fixes its state-store partition count at its first
+    # checkpoint and AQE never coalesces it: one state partition per core.
+    spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
+    return spark
 
 
 # ---------------------------------------------------------------------------
@@ -134,23 +147,26 @@ def unload_state_providers(spark) -> None:
     query is terminated. On a real cluster the call touches the
     driver-local providers only; executor providers unload via the
     coordinator's deactivation broadcast as usual. No-op on sessions
-    without a JVM gateway (logged once, not swallowed silently)."""
+    without a JVM gateway. Each kind of skip (active stream, failed
+    JVM call) is logged once to stderr, not swallowed silently."""
     try:
         if spark.streams.active:
+            _warn_unload_once("active", "skipped while a stream is active")
             return
         jvm = spark._jvm
         jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     except Exception as exc:
-        global _UNLOAD_WARNED
-        if not _UNLOAD_WARNED:
-            _UNLOAD_WARNED = True
-            import sys
-
-            print(
-                f"unload_state_providers: JVM call failed ({exc!r}); "
-                "state providers will unload on the maintenance tick",
-                file=sys.stderr,
-            )
+        _warn_unload_once("jvm", f"JVM call failed ({exc!r})")
 
 
-_UNLOAD_WARNED = False
+_UNLOAD_WARNED: set[str] = set()
+
+
+def _warn_unload_once(kind: str, why: str) -> None:
+    if kind not in _UNLOAD_WARNED:
+        _UNLOAD_WARNED.add(kind)
+        print(
+            f"unload_state_providers: {why}; "
+            "state providers will unload on the maintenance tick",
+            file=sys.stderr,
+        )

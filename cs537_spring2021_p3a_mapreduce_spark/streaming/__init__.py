@@ -3522,9 +3522,11 @@ def run_to_memory(
     ``shuffle_partitions`` scopes the state-store partition count to
     this drain (restored after): a stream's state partitioning is
     fixed at the first checkpoint, and sizing it to the expected key
-    cardinality is the per-stream deploy decision — the driver-entry
-    drains are single-file bounded inputs where the session's batch
-    default (32) is pure per-partition overhead."""
+    cardinality is the per-stream deploy decision. ``get_spark``
+    already sizes it to the cores; the explicit counts the registered
+    drains pass are for vanilla sessions, whose default (Spark's 200)
+    is pure per-partition overhead on their single-file bounded
+    inputs."""
     spark = df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     if shuffle_partitions is not None:

@@ -331,12 +331,19 @@ def test_sample_exact_k_hits_size_contract_and_is_stable(spark):
         # exact K, or the whole group when it's smaller than K
         assert len(ids) == min(SAMPLE_EXACT_K, n_docs_per_lang[lang])
     # deterministic under a different partitioning
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    # (batch width is AQE's initial partition number, so set both)
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+    )
+    prev = {k: spark.conf.get(k) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "3")
     try:
         again = {(r.doc_id, r.lang) for r in sample_exact_k(spark, SF).collect()}
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
     assert again == {(r.doc_id, r.lang) for r in rows}
 
 

@@ -107,7 +107,7 @@ def test_derive_n_salts_sizes_to_hot_share(spark):
         salted_join,
     )
 
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = spark._jsparkSession.sessionState().conf().numShufflePartitions()
 
     # ~50% of rows on key 0 → expect about P/2 salts (MG residual is a
     # lower bound, so allow a tolerant band below the ideal)

@@ -61,3 +61,12 @@ def test_every_persist_site_is_tracked():
             if ".persist(" in line and "track_persist" not in line:
                 offenders.append(f"{py}:{i}: {line.strip()}")
     assert not offenders, offenders
+
+
+def test_session_shuffle_widths(spark):
+    """Streaming state and foreachBatch frames shuffle one partition per
+    core; batch plans still start 32 wide for AQE to coalesce."""
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == (
+        spark.sparkContext.defaultParallelism
+    )
+    assert spark._jsparkSession.sessionState().conf().numShufflePartitions() == 32

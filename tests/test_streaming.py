@@ -178,13 +178,49 @@ def test_dedup_stream_drops_duplicates_within_horizon(spark, tmp_path):
         str(src)
     )
     out = st.dedup_stream(stream, st.content_key("text"), "ts", "1 hour")
-    st.run_to_memory(out, "dedup_stream_out", str(tmp_path / "ckpt"), "append")
+    ckpt = str(tmp_path / "ckpt")
+    q1 = st.run_to_memory(out, "dedup_stream_out", ckpt, "append")
     got = spark.sql("SELECT * FROM dedup_stream_out").collect()
     # exactly one survivor per normalized content key
     assert len(got) == 2
     assert {r.text.strip().lower() for r in got} == {"hello world", "something else"}
     # schema passes through minus the internal dedup key
     assert set(got[0].asDict()) == {"doc_id", "text", "ts"}
+
+    # restart from the checkpoint under a different shuffle default:
+    # the state keeps its first partitioning and still drops an
+    # in-horizon resend (through foreachBatch: the memory sink
+    # recovers only in complete mode)
+    spark.createDataFrame(
+        [
+            (5, "hello world", "2024-01-01 00:40:00"),  # resend within 1 hour
+            (6, "brand new doc", "2024-01-01 00:45:00"),
+        ],
+        "doc_id bigint, text string, ts_s string",
+    ).withColumn("ts", F.col("ts_s").cast("timestamp")).drop("ts_s").write.mode(
+        "append"
+    ).parquet(str(src))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(int(prev) + 3))
+    try:
+        resumed = []
+        q2 = (
+            out.writeStream.foreachBatch(lambda df, _: resumed.extend(df.collect()))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        drained = q2.awaitTermination(120)
+        q2.stop()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert drained
+    assert [r.doc_id for r in resumed] == [6]
+
+    def state_parts(q):
+        return {p["stateOperators"][0]["numShufflePartitions"] for p in q.recentProgress}
+
+    assert state_parts(q2) == state_parts(q1) == {int(prev)}
 
 
 def test_sliding_counts_match_batch(spark, tmp_path, events_stream_dir):
