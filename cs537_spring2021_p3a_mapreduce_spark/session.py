@@ -108,6 +108,20 @@ def track_persist(df, level=None):
     return df
 
 
+def release_tracked(df) -> None:
+    """Unpersist ONE frame persisted through track_persist() and drop it
+    from the release list — for a cache that lives only inside the call
+    that made it (a ``finally``), so a long stream of such calls holds
+    no stale handles between release_persisted() points."""
+    df.unpersist(blocking=False)
+    try:
+        # one C-level call (DataFrame has no __eq__: identity match), so
+        # a concurrent track_persist() from another thread is never lost
+        _TRACKED_PERSISTS.remove(df)
+    except ValueError:
+        pass  # already released by release_persisted()
+
+
 def release_persisted() -> int:
     """Unpersist every tracked frame; returns how many were released.
 

@@ -457,14 +457,56 @@ def _refuse_dv(entries: list[dict], op: str) -> None:
         )
 
 
+def _read_files(spark, path: str, names: list[str]):
+    """One scan over listed part files (relative names, or the absolute
+    paths a shallow clone lists), their footers' schemas MERGED: files
+    committed before an additive schema change read NULL for the new
+    columns instead of a one-file schema silently dropping them."""
+    return spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(path, f) for f in names]
+    )
+
+
+def _stage_files(df, path: str, prefix: str = "part-") -> list[dict]:
+    """Write ``df`` in ONE job to scratch and adopt every non-empty
+    part file into the table directory under a unique name — staged,
+    manifest-invisible until a commit lists them. Returns their
+    manifest entries, ``n_rows`` read from each file's parquet footer
+    (no ``count()`` job). The caller decides the file layout:
+    ``coalesce(1)`` for one file, or the plan's own partitioning."""
+    import glob
+    import shutil
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    tmpdir = tempfile.mkdtemp(prefix="mstage_")
+    try:
+        df.write.mode("overwrite").parquet(tmpdir)
+        entries = []
+        for written in sorted(glob.glob(os.path.join(tmpdir, "part-*.parquet"))):
+            n = pq.read_metadata(written).num_rows
+            if n == 0:
+                continue  # the schema-only file of an all-empty write
+            name = f"{prefix}{uuid.uuid4().hex}.parquet"
+            shutil.move(written, os.path.join(path, name))
+            entries.append({"file": name, "n_rows": n})
+    finally:
+        shutil.rmtree(tmpdir, ignore_errors=True)
+    return entries
+
+
 def plan_delete(spark, path: str, condition: str) -> dict:
     """Phase 1 of copy-on-write DELETE as an optimistic TRANSACTION:
-    scan at the current generation (the transaction's BASE), rewrite
-    only the files that actually CONTAIN matching rows (without their
-    matches) to staged part files — unique names, manifest-invisible
-    until commit. Returns the staged transaction for
-    ``commit_transaction``; a conflict abort leaves only invisible
-    strays (clean with ``abort_transaction``)."""
+    scan at the current generation (the transaction's BASE), then
+    rewrite only the files that actually CONTAIN matching rows,
+    without their matches, in ONE write job: every hit file's
+    survivors are staged together, packed per input split (one output
+    file per split, bounded by ``maxPartitionBytes``), with row counts
+    read from the written footers — no ``count()`` job. Staged files
+    are unique-named and manifest-invisible until commit. Returns the
+    staged transaction for ``commit_transaction``; a conflict abort
+    leaves only invisible strays (clean with ``abort_transaction``)."""
     _require_local(path, "plan_delete")
     from pyspark.sql import functions as F
 
@@ -489,28 +531,9 @@ def plan_delete(spark, path: str, condition: str) -> dict:
     # files by absolute path while input_file_name reports the same
     # file — names are uuid-unique, so basename matching is exact
     hit_files = [f for f in files if os.path.basename(f) in hit_base]
-    add_entries = []
-    for f in hit_files:
-        survivors = spark.read.parquet(os.path.join(path, f)).where(
-            f"NOT ({condition})"
-        )
-        n = survivors.count()
-        if n == 0:
-            continue  # whole file deleted: remove with no replacement
-        # executor-side rewrite (no driver materialization): write
-        # the survivor set as one file to scratch, adopt it into the
-        # table directory under a unique name
-        import glob as _glob
-        import shutil as _shutil
-        import tempfile as _tempfile
-
-        tmpdir = _tempfile.mkdtemp(prefix="mdel_")
-        survivors.coalesce(1).write.mode("overwrite").parquet(tmpdir)
-        written = _glob.glob(os.path.join(tmpdir, "part-*.parquet"))[0]
-        newname = f"part-{uuid.uuid4().hex}.parquet"
-        _shutil.move(written, os.path.join(path, newname))
-        _shutil.rmtree(tmpdir, ignore_errors=True)
-        add_entries.append({"file": newname, "n_rows": n})
+    add_entries = [] if not hit_files else _stage_files(
+        _read_files(spark, path, hit_files).where(f"NOT ({condition})"), path
+    )
     return {
         "base_generation": base_generation,
         "remove_files": sorted(hit_files),
@@ -524,67 +547,66 @@ def plan_merge(spark, path: str, updates, key_cols: list[str]) -> dict:
     """Phase 1 of keyed MERGE (upsert) as an optimistic transaction —
     the Delta ``MERGE INTO`` / Iceberg copy-on-write upsert in the
     repo's minimal honest form: only files CONTAINING matched keys
-    are rewritten (their matched rows dropped); every update row —
-    matched or brand-new — lands in one appended file, so the merged
-    view is last-write-wins per key. File scoping mirrors
-    ``plan_delete``: one semi-join scan finds the hit files, each is
-    rewritten with a broadcast anti-join on the keys; untouched files
-    carry by reference at commit. Returns the staged transaction for
+    are rewritten (their matched rows dropped), and every update row —
+    matched or brand-new — is staged beside them, so the merged view
+    is last-write-wins per key. Untouched files carry by reference at
+    commit.
+
+    ``updates`` and its distinct key set are evaluated ONCE (persisted
+    for the call): one semi-join scan finds the hit files, then ONE
+    write job stages the hit files' survivors (broadcast anti-join on
+    the keys, packed per input split — one output file per split,
+    bounded by ``maxPartitionBytes``, never funnelled through one task)
+    together with the update rows (one file). The two sides are
+    combined by name, so updates whose columns differ from the hit
+    files' fail loudly. Row counts come from the written footers — no
+    ``count()`` job. Returns the staged transaction for
     ``commit_transaction`` (conflicts abort; disjoint commits rebase).
     """
     _require_local(path, "plan_merge")
-    import glob as _glob
-    import shutil as _shutil
-    import tempfile as _tempfile
-
+    from pyspark import StorageLevel
     from pyspark.sql import functions as F
     from pyspark.sql.functions import broadcast
+
+    from ..session import release_tracked, track_persist
 
     with open(os.path.join(path, MANIFEST), encoding="utf-8") as fh:
         manifest = json.load(fh)
     _refuse_dv(manifest["files"], "plan_merge")
     base_generation = manifest.get("generation", 0)
     files = [f["file"] for f in manifest["files"]]
-    keys = updates.select(*key_cols).distinct()
-    hit_rows = [] if not files else (
-        spark.read.parquet(*[os.path.join(path, f) for f in files])
-        # input_file_name() must be captured BEFORE the join: Spark
-        # rejects it once the plan has more than one source
-        .select(F.input_file_name().alias("f"), *key_cols)
-        .join(broadcast(keys), key_cols, "left_semi")
-        .groupBy("f")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    hit_base = {os.path.basename(r.f.removeprefix("file:")) for r in hit_rows}
-    # basename matching: clone listings reference source files by
-    # absolute path (see plan_delete)
-    hit_files = [f for f in files if os.path.basename(f) in hit_base]
-
-    def _adopt(df) -> dict | None:
-        n = df.count()
-        if n == 0:
-            return None
-        tmpdir = _tempfile.mkdtemp(prefix="mmerge_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmpdir)
-        written = _glob.glob(os.path.join(tmpdir, "part-*.parquet"))[0]
-        newname = f"part-{uuid.uuid4().hex}.parquet"
-        _shutil.move(written, os.path.join(path, newname))
-        _shutil.rmtree(tmpdir, ignore_errors=True)
-        return {"file": newname, "n_rows": n}
-
-    add_entries = []
-    for f in sorted(hit_files):
-        survivors = (
-            spark.read.parquet(os.path.join(path, f))
-            .join(broadcast(keys), key_cols, "left_anti")
+    # a caller's own cache is reused, and left in place
+    owned = updates.storageLevel == StorageLevel.NONE
+    if owned:
+        updates = track_persist(updates)
+    keys = track_persist(updates.select(*key_cols).distinct())
+    try:
+        hit_rows = [] if not files else (
+            spark.read.parquet(*[os.path.join(path, f) for f in files])
+            # input_file_name() must be captured BEFORE the join: Spark
+            # rejects it once the plan has more than one source
+            .select(F.input_file_name().alias("f"), *key_cols)
+            .join(broadcast(keys), key_cols, "left_semi")
+            .groupBy("f")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
         )
-        entry = _adopt(survivors)
-        if entry is not None:
-            add_entries.append(entry)
-    upd_entry = _adopt(updates)
-    if upd_entry is not None:
-        add_entries.append(upd_entry)
+        hit_base = {os.path.basename(r.f.removeprefix("file:")) for r in hit_rows}
+        # basename matching: clone listings reference source files by
+        # absolute path (see plan_delete)
+        hit_files = [f for f in files if os.path.basename(f) in hit_base]
+        staged = updates.coalesce(1)
+        if hit_files:
+            staged = (
+                _read_files(spark, path, hit_files)
+                .join(broadcast(keys), key_cols, "left_anti")
+                .unionByName(staged)
+            )
+        add_entries = _stage_files(staged, path)
+    finally:
+        release_tracked(keys)
+        if owned:
+            release_tracked(updates)
     return {
         "base_generation": base_generation,
         "remove_files": sorted(hit_files),
@@ -606,10 +628,6 @@ def plan_optimize(spark, path: str, target_rows: int) -> dict:
     is exactly why OPTIMIZE runs safely alongside ingest on a real
     lake. Files at or above the target carry by reference."""
     _require_local(path, "plan_optimize")
-    import glob as _glob
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     with open(os.path.join(path, MANIFEST), encoding="utf-8") as fh:
         manifest = json.load(fh)
     base_generation = manifest.get("generation", 0)
@@ -637,19 +655,11 @@ def plan_optimize(spark, path: str, target_rows: int) -> dict:
     add_entries = []
     remove_files = []
     for b in bins:
-        srcs = [os.path.join(path, e["file"]) for e in b]
-        tmpdir = _tempfile.mkdtemp(prefix="mopt_")
-        spark.read.parquet(*srcs).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmpdir)
-        written = _glob.glob(os.path.join(tmpdir, "part-*.parquet"))[0]
-        newname = f"part-{uuid.uuid4().hex}.parquet"
-        _shutil.move(written, os.path.join(path, newname))
-        _shutil.rmtree(tmpdir, ignore_errors=True)
-        add_entries.append(
-            {"file": newname, "n_rows": sum(e["n_rows"] for e in b)}
+        names = [e["file"] for e in b]
+        add_entries += _stage_files(
+            _read_files(spark, path, names).coalesce(1), path
         )
-        remove_files.extend(e["file"] for e in b)
+        remove_files.extend(names)
     return {
         "base_generation": base_generation,
         "remove_files": sorted(remove_files),
@@ -674,7 +684,10 @@ def optimize_compact(spark, path: str, target_rows: int) -> tuple[int, int]:
 
 
 def merge_upsert(spark, path: str, updates, key_cols: list[str]) -> int:
-    """Keyed MERGE with immediate optimistic commit: returns the
+    """Keyed MERGE with immediate optimistic commit (``plan_merge``):
+    one scan finds the files holding matched keys, then one write job
+    stages their survivors, packed per input split, plus the update
+    rows; row counts come from the written footers. Returns the
     number of files rewritten; a superseding overlapping commit
     aborts (staged files cleaned) and raises."""
     txn = plan_merge(spark, path, updates, key_cols)
@@ -718,7 +731,8 @@ def delete_where(spark, path: str, condition: str) -> int:
     Plan + immediate optimistic commit: a commit that lands between
     the scan and the commit aborts (overlapping rewrite) or is
     rebased over (disjoint — e.g. a concurrent append's files carry
-    into the new generation instead of being clobbered)."""
+    into the new generation instead of being clobbered). Like
+    ``merge_upsert``, the rewrite is one write job (``plan_delete``)."""
     txn = plan_delete(spark, path, condition)
     try:
         commit_transaction(path, txn)
@@ -1020,25 +1034,6 @@ def read_manifest_table_pruned(spark, path: str, column: str, lo, hi):
 # ---------------------------------------------------------------------------
 
 
-def _adopt_one_file(spark_df, path: str, prefix: str) -> tuple[str, int]:
-    """Write a DataFrame as ONE parquet file adopted into the table
-    directory under a unique name; returns (name, row_count)."""
-    import glob as _glob
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    tmpdir = _tempfile.mkdtemp(prefix="madopt_")
-    spark_df.coalesce(1).write.mode("overwrite").parquet(tmpdir)
-    written = _glob.glob(os.path.join(tmpdir, "part-*.parquet"))[0]
-    import pyarrow.parquet as _pq
-
-    n = _pq.read_metadata(written).num_rows
-    newname = f"{prefix}{uuid.uuid4().hex}.parquet"
-    _shutil.move(written, os.path.join(path, newname))
-    _shutil.rmtree(tmpdir, ignore_errors=True)
-    return newname, n
-
-
 def plan_delete_dv(spark, path: str, condition: str) -> dict:
     """Phase 1 of MERGE-ON-READ delete as an optimistic transaction:
     one narrow scan (existing DVs applied, so already-deleted rows are
@@ -1091,10 +1086,10 @@ def plan_delete_dv(spark, path: str, condition: str) -> dict:
     matches = scan.where(condition).select(
         F.col("__row_file").alias("file"), F.col("__row_pos").alias("pos")
     )
-    dv_name, total = _adopt_one_file(matches, path, "dv-")
-    if total == 0:
-        os.remove(os.path.join(path, dv_name))
+    staged = _stage_files(matches.coalesce(1), path, "dv-")
+    if not staged:
         return empty
+    dv_name, total = staged[0]["file"], staged[0]["n_rows"]
     # per-file hit counts from the (tiny) adopted sidecar — one row
     # per hit file on the driver, never the positions themselves
     counts = {
@@ -1141,52 +1136,29 @@ def delete_where_dv(spark, path: str, condition: str) -> int:
 
 
 def purge_deletion_vectors(spark, path: str) -> int:
-    """Materialize every deletion vector: each DV'd file is rewritten
-    WITHOUT its deleted positions (anti-join on row_index, per file)
-    and its entry replaced by a clean one — Delta's
+    """Materialize every deletion vector: the DV'd files are rewritten
+    WITHOUT their deleted positions — the readers' (file_name,
+    row_index) anti-join, all files in ONE write job packed per input
+    split — and their entries replaced by clean ones — Delta's
     REORG TABLE ... APPLY (PURGE). The logical table is unchanged
     (pinned by the caller reading before/after); the old files and
     sidecars stay on disk for time travel until vacuum. Returns the
     number of files rewritten. Runs as one optimistic transaction:
     a concurrent commit touching a purged file aborts the purge."""
     _require_local(path, "purge_deletion_vectors")
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import broadcast
-
     with open(os.path.join(path, MANIFEST), encoding="utf-8") as fh:
         manifest = json.load(fh)
     dved = [e for e in manifest["files"] if e.get("dvs")]
     if not dved:
         return 0
-    add_entries = []
-    staged = []
-    for e in dved:
-        src = os.path.join(path, e["file"])
-        base = os.path.basename(e["file"])
-        df = spark.read.parquet(src).select(
-            F.col("_metadata.row_index").alias("__row_pos"), "*"
-        )
-        dv = (
-            spark.read.parquet(*[os.path.join(path, d) for d in e["dvs"]])
-            .where(F.col("file") == base)
-            .select(F.col("pos").alias("__dv_pos"))
-        )
-        survivors = df.join(
-            broadcast(dv),
-            df["__row_pos"] == dv["__dv_pos"],
-            "left_anti",
-        ).drop("__row_pos")
-        newname, n = _adopt_one_file(survivors, path, "part-")
-        if n == 0:
-            os.remove(os.path.join(path, newname))
-            continue  # fully deleted file: removed with no successor
-        staged.append(newname)
-        add_entries.append({"file": newname, "n_rows": n})
+    survivors = _apply_dvs(
+        spark, path, _read_files(spark, path, [e["file"] for e in dved]), dved
+    )
+    add_entries = _stage_files(survivors, path)
     txn = {
         "base_generation": manifest.get("generation", 0),
         "remove_files": sorted(e["file"] for e in dved),
         "add_entries": add_entries,
-        "staged_files": staged,
         "op": "purge_dv",
     }
     try:

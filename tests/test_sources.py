@@ -767,6 +767,130 @@ def test_merge_upsert_file_scoped_and_optimistic(spark, tmp_path):
     assert got[7] == 7.7  # first committer's value stands
 
 
+def test_merge_and_delete_stage_one_write_without_count(
+    spark, tmp_path, monkeypatch
+):
+    """Job shape of the copy-on-write commits: ``plan_merge`` and
+    ``plan_delete`` each run ONE parquet write (the survivors of every
+    hit file, plus the update rows for a merge) and no ``count()``,
+    and leave no tracked cache behind; the staged entries' footer row
+    counts add up to the live rows the commit adds, and the committed
+    table is last-write-wins."""
+    import json
+    import os
+
+    from pyspark.sql import DataFrameWriter
+
+    from cs537_spring2021_p3a_mapreduce_spark import session
+    from cs537_spring2021_p3a_mapreduce_spark.sources.manifest_sink import (
+        MANIFEST,
+        ManifestParquetSink,
+        commit_transaction,
+        plan_delete,
+        plan_merge,
+        read_manifest_table,
+    )
+
+    try:
+        spark.dataSource.register(ManifestParquetSink)
+    except Exception:
+        pass
+
+    def three_slices(name):
+        path = str(tmp_path / name)
+        for lo in (0, 100, 200):  # one single-file slice per append
+            spark.createDataFrame(
+                [(i, f"v{i}") for i in range(lo, lo + 100)], "k long, v string"
+            ).coalesce(1).write.format("mr_manifest").option(
+                "path", path
+            ).mode("append").save()
+        return path
+
+    def rows(path):
+        return {r.k: r.v for r in read_manifest_table(spark, path).collect()}
+
+    def listed_rows(path, files):
+        with open(os.path.join(path, MANIFEST), encoding="utf-8") as fh:
+            entries = json.load(fh)["files"]
+        return sum(e["n_rows"] for e in entries if e["file"] in files)
+
+    merge_path, delete_path = three_slices("m"), three_slices("d")
+    updates = spark.createDataFrame(
+        [(5, "u5"), (250, "u250"), (1000, "ins")], "k long, v string"
+    )
+    writes = []
+    real_parquet = DataFrameWriter.parquet
+
+    def counted_parquet(self, *args, **kwargs):
+        writes.append(args)
+        return real_parquet(self, *args, **kwargs)
+
+    def no_count(self):
+        raise AssertionError("count() job in a copy-on-write commit")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counted_parquet)
+    # the classic DataFrame overrides count(): patch the concrete class
+    monkeypatch.setattr(type(updates), "count", no_count)
+
+    for path, plan, want in (
+        (merge_path, lambda p: plan_merge(spark, p, updates, ["k"]),
+         {**{k: f"v{k}" for k in range(300)}, 5: "u5", 250: "u250", 1000: "ins"}),
+        (delete_path, lambda p: plan_delete(spark, p, "k IN (7, 107, 207) AND k < 200"),
+         {k: f"v{k}" for k in range(300) if k not in (7, 107)}),
+    ):
+        before = len(rows(path))
+        tracked = len(session._TRACKED_PERSISTS)
+        del writes[:]
+        txn = plan(path)
+        assert len(writes) == 1
+        # the call's own caches are released, and forgotten, on return
+        assert len(session._TRACKED_PERSISTS) == tracked
+        assert len(txn["remove_files"]) == 2  # two of the three slices hit
+        kept = before - listed_rows(path, txn["remove_files"])
+        commit_transaction(path, txn)
+        got = rows(path)
+        assert sum(e["n_rows"] for e in txn["add_entries"]) == len(got) - kept
+        assert got == want
+
+
+def test_delete_across_schema_generations_keeps_new_columns(spark, tmp_path):
+    """One rewrite job reads every hit file at once, so their footers'
+    schemas must be MERGED: a delete hitting a file from before an
+    additive column change and one from after keeps the new column's
+    values (older rows read NULL) instead of taking one file's schema
+    for both."""
+    from cs537_spring2021_p3a_mapreduce_spark.sources.manifest_sink import (
+        ManifestParquetSink,
+        delete_where,
+        read_manifest_table,
+    )
+
+    try:
+        spark.dataSource.register(ManifestParquetSink)
+    except Exception:
+        pass
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(i, "old") for i in range(10)], "k long, v string"
+    ).coalesce(1).write.format("mr_manifest").option("path", path).mode(
+        "append"
+    ).save()
+    spark.createDataFrame(
+        [(i, "new", i * 10) for i in range(10, 20)], "k long, v string, w long"
+    ).coalesce(1).write.format("mr_manifest").option("path", path).mode(
+        "append"
+    ).save()
+    assert delete_where(spark, path, "k % 5 = 0") == 2
+    got = {
+        r.k: (r.v, r.w)
+        for r in read_manifest_table(spark, path, merge_schema=True).collect()
+    }
+    assert got == {
+        **{i: ("old", None) for i in range(10) if i % 5},
+        **{i: ("new", i * 10) for i in range(10, 20) if i % 5},
+    }
+
+
 def test_stream_epoch_bookkeeping_survives_commits(spark, tmp_path):
     """Exactly-once epochs: a committed merge records its writer's
     epoch; the epoch map is carried forward by LATER transactions,

@@ -755,9 +755,10 @@ def test_stream_dedup_docs_lsh_matches_batch_banding(spark):
 
 
 def _stage_docs(spark, tmp_path, rows):
-    """Stage one parquet file per ``(doc_id, text)`` row, mtime-ordered,
-    so a ``maxFilesPerTrigger=1`` stream drains them as one micro-batch
-    each in row order. Returns ``(reader, src)``: a factory of fresh
+    """Stage one parquet file per element of ``rows`` — a ``(doc_id,
+    text)`` row, or a list of them — mtime-ordered, so a
+    ``maxFilesPerTrigger=1`` stream drains them as one micro-batch
+    each in order. Returns ``(reader, src)``: a factory of fresh
     document streams over the staged dir, and the dir itself."""
     import glob
     import os
@@ -765,10 +766,11 @@ def _stage_docs(spark, tmp_path, rows):
 
     src = tmp_path / "in"
     src.mkdir()
-    for i, (doc_id, text) in enumerate(rows):
+    for i, batch in enumerate(rows):
         d = tmp_path / f"doc{i}"
         spark.createDataFrame(
-            [(doc_id, text)], "doc_id long, text string"
+            batch if isinstance(batch, list) else [batch],
+            "doc_id long, text string",
         ).coalesce(1).write.parquet(str(d))
         part = glob.glob(str(d / "part-*.parquet"))[0]
         dst = str(src / f"part-{i}.parquet")
@@ -783,6 +785,88 @@ def _stage_docs(spark, tmp_path, rows):
         )
 
     return reader, str(src)
+
+
+def test_dedup_upsert_pipeline_replays_last_batch_after_restart(spark, tmp_path):
+    """The whole ingest pipeline — ``dedup_stream`` → ``foreachBatch``
+    (newest version per key → ``merge_upsert``) — killed between its
+    two commits: the manifest commit of the last batch landed, Spark's
+    checkpoint commit did not (its ``commits/<id>`` file is missing).
+    The restart replays that batch from the dedup state of the batch
+    before; the table's rows must not change, and must equal a Python
+    dedup-then-upsert of the input."""
+    import os
+
+    from pyspark.sql import Window
+
+    from cs537_spring2021_p3a_mapreduce_spark.sources.manifest_sink import (
+        create_manifest_table,
+        merge_upsert,
+        read_manifest_table,
+    )
+
+    files = [
+        [(1, "a x"), (2, " A X "), (3, "a y"), (4, "b x")],
+        # doc 5 resends doc 1 (dropped only if the dedup state holds);
+        # docs 6 and 8 are the newest versions of keys b and c
+        [(5, "a x"), (6, "b z"), (7, "c w"), (8, "c v")],
+    ]
+    reader, _ = _stage_docs(spark, tmp_path, files)
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    create_manifest_table(sink)
+    key = F.substring_index(F.lower(F.trim("text")), " ", 1)
+    newest = Window.partitionBy("key").orderBy(F.col("doc_id").desc())
+
+    def drain():
+        applied = []
+
+        def upsert(df, batch_id):
+            applied.append(batch_id)
+            latest = (
+                df.withColumn("key", key)
+                .withColumn("_r", F.row_number().over(newest))
+                .filter("_r = 1")
+                .select("key", "doc_id", "text")
+            )
+            merge_upsert(spark, sink, latest, ["key"])
+
+        docs = reader().withColumn("ts", F.timestamp_seconds("doc_id"))
+        q = (
+            st.dedup_stream(docs, st.content_key("text"), "ts", "1 hour")
+            .writeStream.foreachBatch(upsert)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        drained = q.awaitTermination(120)
+        q.stop()
+        assert drained
+        return applied
+
+    def table_rows():
+        return sorted(
+            (r.key, r.doc_id, r.text)
+            for r in read_manifest_table(spark, sink).collect()
+        )
+
+    # dedup-then-upsert in Python: the first copy of each normalized
+    # text survives, and a batch's newest doc per key overwrites
+    seen, want = set(), {}
+    for batch in files:
+        for d, t in sorted(batch):
+            norm = t.strip().lower()
+            if norm not in seen:
+                seen.add(norm)
+                want[norm.split(" ")[0]] = (d, t)
+    want = sorted((k, d, t) for k, (d, t) in want.items())
+
+    assert drain() == [0, 1]
+    first = table_rows()
+    assert first == want
+    for f in ("1", ".1.crc"):  # a killed driver leaves neither
+        os.remove(os.path.join(ckpt, "commits", f))
+    assert drain() == [1]  # the replayed batch, and nothing else
+    assert table_rows() == first
 
 
 def test_stream_dedup_docs_lsh_horizon_and_state_eviction(spark, tmp_path):
