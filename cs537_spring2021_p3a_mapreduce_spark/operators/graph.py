@@ -436,7 +436,12 @@ def bfs_hops(edges: DataFrame, src: str, dst: str, source_vertex: int,
     return visited.select("v", F.col("hops").cast("long").alias("hops"))
 
 
-SSSP_HOPS = 4  # bounded Bellman-Ford rounds (bipartite diameter-ish)
+# Bounded Bellman-Ford rounds (bipartite diameter-ish). Like
+# LPA_ROUNDS, the round chain is lazy with no lineage cut: sound only
+# while this K stays small and fixed and ONE action consumes the
+# result — a larger K grows the plan per round, and a second action
+# re-runs the whole chain.
+SSSP_HOPS = 4
 
 
 def sssp_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -823,11 +828,15 @@ ORDER BY 1, 4
 """
 
 
-LPA_ROUNDS = 4  # fixed synchronous rounds: deterministic on both engines
+# Fixed synchronous rounds: deterministic on both engines. The round
+# chain below is lazy, with no lineage cut, which is sound only while
+# this K stays small and fixed and ONE action consumes the result: a
+# larger K grows the plan per round, and a second action re-runs the
+# whole chain.
+LPA_ROUNDS = 4
 
 
-def label_propagation(edges: DataFrame, src: str, dst: str,
-                      rounds: int = LPA_ROUNDS) -> DataFrame:
+def label_propagation(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation — the
     seventh graph kernel (CC, PageRank, BFS, SSSP, triangles, k-core,
     and now LPA): every vertex starts as its own label; each round,
@@ -851,7 +860,7 @@ def label_propagation(edges: DataFrame, src: str, dst: str,
     CC/BFS loops keep theirs because they need a materialized
     convergence scalar each round; this kernel does not).
 
-    Output: vertex, community (the surviving label after ``rounds``).
+    Output: vertex, community (the surviving label after LPA_ROUNDS).
     """
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     e = (
@@ -863,7 +872,7 @@ def label_propagation(edges: DataFrame, src: str, dst: str,
     labels = e.select(F.col("s").alias("v")).distinct().withColumn(
         "lbl", F.col("v")
     )
-    for _ in range(rounds):
+    for _ in range(LPA_ROUNDS):
         votes = (
             e.join(labels, e["s"] == labels["v"])
             .groupBy(F.col("d").alias("tv"), "lbl")

@@ -12,6 +12,14 @@ Scale notes per operator are in docstrings; the common rules:
 - array math via higher-order functions (JVM, codegen),
 - deterministic outputs: integer arithmetic or round(·, 6), total
   orderings with key tiebreaks.
+
+Integer vector-search kernel (the section headed by PQ_INT_SCALE):
+quantize → centroid sample → per-centroid distances → IVF
+candidates → integer cosine → top-k per query, plus the Lloyd round
+and the PQ sub-space sums, each written once. The oracle-exact IVF,
+PQ and IVF-PQ entries, k-means, the recall report and retrain loop,
+Matryoshka overlap, SemDeDup, MMR, binary re-rank, embedding
+decontamination and ``streaming.stream_ivf_assign`` compose them.
 """
 
 from __future__ import annotations
@@ -548,76 +556,23 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
       selected via TakeOrderedAndProject);
     - assignment = argmin of squared-L2 in micro² longs, ties by
       cluster id;
-    - update = per-dimension integer mean re-quantized to longs (64
-      sum expressions in one hash aggregate — the wide-agg trick —
-      then re-packed to an array).
+    - update = per-dimension integer mean re-quantized to longs
+      (``_lloyd``).
 
-    Scale shape: assignment is fully NARROW — the K centroids fold
-    into one collected row, 1-row-broadcast-crossJoined to the
-    corpus, and each vector takes argmin via ``array_min`` over
-    per-centroid (dist, cid) structs (struct ordering IS the
-    tie-break); each iteration then adds one K-key aggregate for
-    the centroid update, the only shuffle per round; the training
+    Scale shape: assignment is fully NARROW (``_nearest_centroid``:
+    one broadcast centroid row, ``array_min`` over per-centroid
+    (d2, cid) structs); each round adds the centroid update's
+    aggregates and localCheckpoints the K-row result; the training
     corpus is a SAMPLE by construction — production trains on a
-    bounded sample exactly like this, then assigns the full corpus
-    through the IVF GEMM path. The loop is lazily composed into one
-    DAG (KMEANS_ITERS is small and fixed); an open-iteration-count
-    variant would localCheckpoint per round like dedup_clusters.
+    bounded sample exactly like this, then assigns the full corpus.
 
     Output: vec_id, cluster, dist (squared L2 in micro² units).
     """
-    vecs = _kmeans_vecs(spark, sf_dir)
+    vecs = _quantize(table(spark, sf_dir, "embeddings"), KM_SCALE)
     # pass vecs through so the training loop and this final assignment
     # share one persisted corpus (identical plan -> one cache entry)
-    return _kmeans_assign(vecs, _kmeans_cents(spark, sf_dir, vecs)).select(
+    return _nearest_centroid(vecs, _kmeans_cents(spark, sf_dir, vecs)).select(
         "vec_id", F.col("cid").alias("cluster"), "dist"
-    )
-
-
-def _kmeans_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, q): embeddings quantized to exact micro-unit longs."""
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return emb.select(
-        "vec_id",
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * KM_SCALE).cast("long")
-        ).alias("q"),
-    )
-
-
-def _kmeans_assign(vecs: DataFrame, cents_df: DataFrame) -> DataFrame:
-    # All K centroids fold into ONE row (collect_list over K
-    # rows), 1-row-broadcast-crossJoined to the corpus; each
-    # vector then picks argmin_(dist, cid) via array_min over
-    # per-centroid (dist, cid) structs — struct comparison IS
-    # the tie-break rule, and collect_list's nondeterministic
-    # order is irrelevant to a min. Assignment is thereby fully
-    # NARROW: zero shuffle of the n×K product (the previous
-    # form shuffled it through a per-vec_id row_number window
-    # every iteration — 4 avoidable n×K exchanges).
-    carr = cents_df.agg(F.collect_list(F.struct("cid", "cq")).alias("cents"))
-    best = F.array_min(
-        F.transform(
-            "cents",
-            lambda c: F.struct(
-                F.aggregate(
-                    F.zip_with("q", c["cq"], lambda a, b: (a - b) * (a - b)),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ).alias("dist"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )
-    return (
-        vecs.crossJoin(F.broadcast(carr))
-        .withColumn("best", best)
-        .select(
-            "vec_id",
-            "q",
-            F.col("best.cid").alias("cid"),
-            F.col("best.dist").alias("dist"),
-        )
     )
 
 
@@ -628,45 +583,13 @@ def _kmeans_cents(
     KMEANS_ITERS rounds from the md5 hash-sample init — the shared
     coarse quantizer for embedding_kmeans and the trained IVF.
 
-    Iteration discipline (the graph-kernel lesson): the corpus is
-    PERSISTED once (without it, the nested per-iteration plans rescan
-    the embeddings KMEANS_ITERS+1 times — three extra corpus scans at
-    100 TB), and each round's K-row centroid relation is
-    localCheckpoint-ed so plan depth stays constant instead of
-    nesting every prior iteration's aggregates."""
+    The corpus is PERSISTED once: without it, the nested
+    per-iteration plans rescan the embeddings KMEANS_ITERS+1 times
+    (three extra corpus scans at 100 TB)."""
     if vecs is None:
-        vecs = _kmeans_vecs(spark, sf_dir)
+        vecs = _quantize(table(spark, sf_dir, "embeddings"), KM_SCALE)
     vecs = track_persist(vecs)
-    init_order = [F.md5(F.col("vec_id").cast("string")), F.col("vec_id")]
-    w_init = Window.orderBy(*init_order)
-    cents = (
-        vecs.orderBy(*init_order)
-        .limit(KMEANS_K)
-        .select(
-            (F.row_number().over(w_init) - 1).cast("long").alias("cid"),
-            F.col("q").alias("cq"),
-        )
-    )
-    for _ in range(KMEANS_ITERS):
-        assigned = _kmeans_assign(vecs, cents)
-        # centroid update via narrow unpivot: posexplode the array
-        # and aggregate (cid, dim) — K·64 output groups, map-side
-        # combine collapses the ×64 row fan-out immediately. The
-        # previous 64-wide sum aggregate computed the same integers
-        # but compiled 64 expressions per iteration; Janino compile
-        # time dominated the whole query (measured 2.7× slower).
-        dims = assigned.select("cid", F.posexplode("q").alias("dim", "v"))
-        means = dims.groupBy("cid", "dim").agg(
-            F.round(F.sum("v") / F.count(F.lit(1))).cast("long").alias("c")
-        )
-        cents = (
-            means.groupBy("cid")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("s"))
-            .select("cid", F.transform("s", lambda x: x["c"]).alias("cq"))
-            .localCheckpoint()  # K rows: constant plan depth per round
-        )
-
-    return cents
+    return _lloyd(vecs, _centroid_sample(vecs, KMEANS_K), KMEANS_ITERS)
 
 
 def similarity_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -854,35 +777,284 @@ def similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# fixed-point scale for the oracle-exact PQ twin (2^20: float32
+# --- integer vector-search kernel ------------------------------------------
+# Every stage of the exact-integer vector search, written once:
+# quantize → centroid sample → per-centroid distances (argmin or
+# probe order) → IVF candidates → integer cosine → top-k per query,
+# plus the Lloyd round and the PQ stages (sub-space sums, encode, ADC
+# candidate cut). The IVF, PQ, IVF-PQ, k-means, recall, Matryoshka,
+# SemDeDup, MMR, binary re-rank, decontamination and streaming-assign
+# entries compose these functions; each DuckDB oracle stays its own
+# independent statement of the same arithmetic.
+
+# fixed-point scale of the oracle-exact vector entries (2^20: float32
 # embeddings in [-1, 1]-ish quantize with ~6 decimal digits kept;
 # every downstream sum stays far under 2^53 so BIGINT→DOUBLE casts
 # are exact)
 PQ_INT_SCALE = 1 << 20
+IVF_INT_K = 16  # coarse cells of the integer IVF
+IVF_INT_NPROBE = 4  # cells probed per query
+
+
+def _quantize(
+    emb: DataFrame, scale: int = PQ_INT_SCALE, *keep: Column
+) -> DataFrame:
+    """(vec_id, *keep, q): every embedding component as round(x ·
+    scale) in exact BIGINTs. The float widens to double BEFORE the
+    multiply, so the product is exact and both engines round the same
+    value."""
+    return emb.select(
+        "vec_id",
+        *keep,
+        F.expr(
+            "transform(embedding, x -> "
+            f"cast(round(cast(x as double) * {scale}) as bigint))"
+        ).alias("q"),
+    )
+
+
+def _centroid_sample(vecs: DataFrame, k: int) -> DataFrame:
+    """(cid, cq): the k vectors with the smallest ``(md5(vec_id),
+    vec_id)``, numbered 0..k-1 in that order — a deterministic uniform
+    hash-sample (md5 because both engines compute it on identical
+    strings), selected via TakeOrderedAndProject."""
+    order = [F.md5(F.col("vec_id").cast("string")), F.col("vec_id")]
+    return (
+        vecs.orderBy(*order)
+        .limit(k)
+        .select(
+            (F.row_number().over(Window.orderBy(*order)) - 1)
+            .cast("long")
+            .alias("cid"),
+            F.col("q").alias("cq"),
+        )
+    )
+
+
+def _centroid_d2(vecs: DataFrame, cents: DataFrame) -> tuple[DataFrame, Column]:
+    """``vecs`` crossJoined to ONE broadcast row holding every (cid,
+    cq) centroid, and the per-centroid (d2, cid) struct array over it
+    (squared L2 in exact BIGINTs). Struct order IS the (distance,
+    cell id) tie-break, and collect_list's order is irrelevant to a
+    min or a sort, so assignment is fully narrow — no shuffle of the
+    n×K product."""
+    carr = cents.agg(F.collect_list(F.struct("cid", "cq")).alias("cents"))
+    d2 = F.transform(
+        "cents",
+        lambda c: F.struct(
+            F.aggregate(
+                F.zip_with("q", c["cq"], lambda a, b: (a - b) * (a - b)),
+                F.lit(0).cast("long"),
+                lambda acc, x: acc + x,
+            ).alias("d2"),
+            c["cid"].alias("cid"),
+        ),
+    )
+    return vecs.crossJoin(F.broadcast(carr)), d2
+
+
+def _nearest_centroid(vecs: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, q, cid, dist): each vector's nearest centroid —
+    ``array_min`` of the (d2, cid) array, no sort."""
+    joined, d2 = _centroid_d2(vecs, cents)
+    return joined.withColumn("best", F.array_min(d2)).select(
+        "vec_id",
+        "q",
+        F.col("best.cid").alias("cid"),
+        F.col("best.d2").alias("dist"),
+    )
+
+
+def _ranked_centroids(vecs: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, q, ds): the (d2, cid) array sorted ascending — ``ds[0]``
+    is the vector's cell, ``_probe_cells()`` its probe set. Sorting
+    the K-array is O(K log K) per row with K a constant, still narrow."""
+    joined, d2 = _centroid_d2(vecs, cents)
+    return joined.select("vec_id", "q", F.array_sort(d2).alias("ds"))
+
+
+def _probe_cells() -> Column:
+    """The IVF_INT_NPROBE nearest cell ids of a ``_ranked_centroids`` row."""
+    return F.expr(f"transform(slice(ds, 1, {IVF_INT_NPROBE}), s -> s.cid)")
+
+
+def _queries(vecs: DataFrame) -> DataFrame:
+    """(query_id, qq): the SIM_N_QUERIES probe queries."""
+    return vecs.where(F.col("vec_id") < SIM_N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("q").alias("qq")
+    )
+
+
+def _neighbors(vecs: DataFrame) -> DataFrame:
+    """(neighbor_id, nq): every vector as a candidate neighbor."""
+    return vecs.select(F.col("vec_id").alias("neighbor_id"), F.col("q").alias("nq"))
+
+
+def _query_pairs(vecs: DataFrame) -> DataFrame:
+    """Every (query, other vector) pair: the broadcast query side
+    against one corpus pass (the ``similarity_topk`` shape)."""
+    return F.broadcast(_queries(vecs)).join(
+        _neighbors(vecs), F.col("neighbor_id") != F.col("query_id")
+    )
+
+
+def _ivf_candidates(ranked: DataFrame) -> DataFrame:
+    """(cell, query_id, qq, neighbor_id, nq): the index — every vector
+    in its nearest cell — equi-joined to the probe queries exploded
+    over their IVF_INT_NPROBE nearest cells. cid is unique per cell,
+    so (query, neighbor) pairs are already distinct; the join is
+    bounded by nprobe × cell population."""
+    index = ranked.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("q").alias("nq"),
+        F.col("ds")[0]["cid"].alias("cell"),
+    )
+    probes = ranked.where(F.col("vec_id") < SIM_N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("q").alias("qq"),
+        F.explode(_probe_cells()).alias("cell"),
+    )
+    return probes.join(index, "cell").where(
+        F.col("neighbor_id") != F.col("query_id")
+    )
+
+
+def _int_dot(a: str, b: str) -> Column:
+    """Exact BIGINT dot product of two BIGINT arrays."""
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, (a, b) -> a * b), 0L, (s, x) -> s + x)"
+    )
+
+
+def _int_cos(qc: str, nc: str) -> Column:
+    """Cosine of two BIGINT arrays: exact integer dot and squared
+    norms, then one sqrt/multiply/divide on exactly-cast doubles
+    (correctly rounded IEEE, identical across engines), round 6.
+    Zero-norm guarded to 0.0: 0/0 has no value both engines agree on."""
+    dot = _int_dot(qc, nc)
+    na = F.expr(f"aggregate({qc}, 0L, (s, x) -> s + x * x)")
+    nb = F.expr(f"aggregate({nc}, 0L, (s, x) -> s + x * x)")
+    return F.when(
+        (na > 0) & (nb > 0),
+        F.round(
+            dot.cast("double")
+            / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))),
+            6,
+        ),
+    ).otherwise(F.lit(0.0))
+
+
+def _topk(df: DataFrame, score: str, k: int, nbr: str = "neighbor_id") -> DataFrame:
+    """The rows ranked ≤ k per query_id by (score desc, nbr asc)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc(nbr))
+    return (
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+    )
+
+
+def _cos_topk(pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cos_sim): the SIM_K best neighbors per
+    query by integer cosine over pairs carrying ``qq`` and ``nq``."""
+    scored = pairs.select(
+        "query_id", "neighbor_id", _int_cos("qq", "nq").alias("cos_sim")
+    )
+    return _topk(scored, "cos_sim", SIM_K)
+
+
+def _rerank(vecs: DataFrame, cands: DataFrame) -> DataFrame:
+    """Exact re-rank of (query_id, neighbor_id) candidates: attach both
+    full vectors (the query side broadcast), then ``_cos_topk``."""
+    return _cos_topk(
+        cands.join(_neighbors(vecs), "neighbor_id").join(
+            F.broadcast(_queries(vecs)), "query_id"
+        )
+    )
+
+
+def _lloyd(vecs: DataFrame, cents: DataFrame, rounds: int) -> DataFrame:
+    """``rounds`` Lloyd iterations from ``cents`` (cid, cq): assign
+    every vector to its nearest centroid, then set each centroid to
+    the per-dimension integer mean of its members. The update is a
+    narrow unpivot — posexplode the array and aggregate (cid, dim),
+    K·dim groups that map-side combine collapses at once (a 64-wide
+    sum aggregate computed the same integers but compiled 64
+    expressions per round, measured 2.7× slower). Each round's K-row
+    result is localCheckpoint-ed, so plan depth stays constant."""
+    for _ in range(rounds):
+        dims = _nearest_centroid(vecs, cents).select(
+            "cid", F.posexplode("q").alias("dim", "v")
+        )
+        means = dims.groupBy("cid", "dim").agg(
+            F.round(F.sum("v") / F.count(F.lit(1))).cast("long").alias("c")
+        )
+        cents = (
+            means.groupBy("cid")
+            .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("s"))
+            .select("cid", F.transform("s", lambda x: x["c"]).alias("cq"))
+            .localCheckpoint()
+        )
+    return cents
+
+
+def _pq_sums(a: str, b: str, term: str) -> Column:
+    """Per PQ sub-space m (0..PQ_M-1), Σ ``term`` over that sub-space's
+    EMB_DIM/PQ_M components of arrays ``a`` and ``b`` — the squared
+    distance of the encode and the inner product of the ADC table."""
+    sub_d = EMB_DIM // PQ_M
+    return F.expr(
+        f"transform(sequence(0, {PQ_M - 1}), m -> "
+        f"aggregate(slice(zip_with({a}, {b}, (a, b) -> {term}), "
+        f"m * {sub_d} + 1, {sub_d}), 0L, (acc, x) -> acc + x))"
+    )
+
+
+def _pq_encode(vecs: DataFrame, v: str, book: DataFrame, c: str) -> DataFrame:
+    """(vec_id, m, code): per vector and sub-space, the nearest of the
+    PQ_K codewords (k, ``c``) in ``book`` — one broadcast join, then a
+    (d2, k) struct-min, so ties go to the lowest code."""
+    return (
+        vecs.crossJoin(F.broadcast(book))
+        .select(
+            "vec_id",
+            "k",
+            F.posexplode(_pq_sums(v, c, "(a - b) * (a - b)")).alias("m", "d2"),
+        )
+        .groupBy("vec_id", "m")
+        .agg(F.min(F.struct("d2", "k")).alias("mk"))
+        .select("vec_id", "m", F.col("mk.k").alias("code"))
+    )
+
+
+def _adc_candidates(scored: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id): per query, the PQ_CAND vectors with the
+    largest summed ADC inner product over their (sub-space, code) rows."""
+    approx = (
+        scored.where(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", "vec_id")
+        .agg(F.sum("ip").alias("approx"))
+    )
+    return _topk(approx, "approx", PQ_CAND, "vec_id").select(
+        "query_id", F.col("vec_id").alias("neighbor_id")
+    )
 
 
 def similarity_pq_int(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORACLE-EXACT twin of ``similarity_pq``: the same PQ dataflow —
-    codebook → per-subspace encode → ADC scoring → top-PQ_CAND →
-    exact re-rank → top-SIM_K — carried out entirely in
-    fixed-point INTEGER arithmetic (embeddings quantized at
-    PQ_INT_SCALE) so DuckDB can replay the PIPELINE itself and the
-    driver's hash compare pins every stage: codebook choice, code
-    assignment ties, ADC sums, candidate cut, re-rank order. The
-    float ``similarity_pq`` stays the production entry (numpy ADC,
-    hash-sampled codebook) with recall gates in tests; this twin is
-    the driver-checkable contract that the PQ *algorithm* — not just
-    its row count — is right (the ``ann_lsh_pairs`` discipline
-    applied to the quantization family).
+    """Oracle-exact product quantization: codebook → per-subspace
+    encode → ADC scoring → top-PQ_CAND → exact re-rank → top-SIM_K,
+    carried out entirely in fixed-point INTEGER arithmetic
+    (embeddings quantized at PQ_INT_SCALE) so DuckDB replays the
+    PIPELINE itself and the oracle gate's hash compare pins every stage:
+    codebook choice, code assignment ties, ADC sums, candidate cut,
+    re-rank order. The float ``similarity_pq`` (numpy ADC) runs the
+    same algorithm rows-only.
 
     Determinism argument: d2 / inner-product sums are exact BIGINTs
     (≤ 64·(2·2^20)² ≈ 2^45); code argmin ties break to the lowest
-    code via a (d2, k) struct-min; the re-rank cosine is
-    dot/(sqrt(na)·sqrt(nb)) on exactly-cast doubles — one sqrt, one
-    multiply, one divide, all exact-rounded IEEE ops, identical
-    across engines; round(·, 6) last. Codebook = the PQ_K lowest
-    vec_ids (deterministic; the hash-sampled and Lloyd-trained
-    codebooks of the float path plug into the same seam).
+    code via a (d2, k) struct-min; the re-rank is ``_int_cos``.
+    Codebook = the PQ_K lowest vec_ids (deterministic; a trained
+    codebook plugs into the same seam).
 
     Scale shape: encode is |corpus| × PQ_K broadcast-join rows (K is
     a constant 16); ADC is a broadcast lookup-table join keyed
@@ -891,95 +1063,26 @@ def similarity_pq_int(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: query_id, neighbor_id, cos_sim (round 6).
     """
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qv = track_persist(
-        emb.select(
-            "vec_id",
-            F.expr(
-                "transform(embedding, x -> "
-                f"cast(round(cast(x as double) * {PQ_INT_SCALE}) as bigint))"
-            ).alias("q"),
-        )
-    )
-    sub_d = 64 // PQ_M
+    qv = track_persist(_quantize(table(spark, sf_dir, "embeddings")))
     cent = qv.where(F.col("vec_id") < PQ_K).select(
         F.col("vec_id").alias("k"), F.col("q").alias("c")
     )
-    # encode: per (vector, centroid) the 64 squared diffs, sliced into
-    # PQ_M subspace sums — all narrow after one 16-row broadcast join
-    d2_arr = F.expr(
-        f"transform(sequence(0, {PQ_M - 1}), m -> "
-        f"aggregate(slice(zip_with(q, c, (a, b) -> (a - b) * (a - b)), "
-        f"m * {sub_d} + 1, {sub_d}), 0L, (acc, x) -> acc + x))"
-    )
-    sub = (
-        qv.crossJoin(F.broadcast(cent))
-        .select("vec_id", "k", F.posexplode(d2_arr).alias("m", "d2"))
-    )
-    codes = (
-        sub.groupBy("vec_id", "m")
-        .agg(F.min(F.struct("d2", "k")).alias("mk"))  # ties → lowest code
-        .select("vec_id", "m", F.col("mk.k").alias("code"))
-    )
+    codes = _pq_encode(qv, "q", cent, "c")
     # ADC lookup table: query-subvector · centroid-subvector, integer
-    ip_arr = F.expr(
-        f"transform(sequence(0, {PQ_M - 1}), m -> "
-        f"aggregate(slice(zip_with(qq, c, (a, b) -> a * b), "
-        f"m * {sub_d} + 1, {sub_d}), 0L, (acc, x) -> acc + x))"
-    )
     lut = (
-        qv.where(F.col("vec_id") < SIM_N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), F.col("q").alias("qq"))
+        _queries(qv)
         .crossJoin(F.broadcast(cent))
-        .select("query_id", "k", F.posexplode(ip_arr).alias("m", "ip"))
+        .select(
+            "query_id", "k", F.posexplode(_pq_sums("qq", "c", "a * b")).alias("m", "ip")
+        )
     )
-    approx = (
+    cands = _adc_candidates(
         codes.join(
             F.broadcast(lut),
             (codes["m"] == lut["m"]) & (codes["code"] == lut["k"]),
         )
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("ip").alias("approx"))
     )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.desc("approx"), F.asc("vec_id")
-    )
-    cands = (
-        approx.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") <= PQ_CAND)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    # exact re-rank on the quantized vectors (deterministic cosine)
-    nbr = qv.select(F.col("vec_id").alias("neighbor_id"), F.col("q").alias("nq"))
-    qs = qv.where(F.col("vec_id") < SIM_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qq")
-    )
-    dot = F.expr("aggregate(zip_with(qq, nq, (a, b) -> a * b), 0L, (s, x) -> s + x)")
-    na = F.expr("aggregate(qq, 0L, (s, x) -> s + x * x)")
-    nb = F.expr("aggregate(nq, 0L, (s, x) -> s + x * x)")
-    cos = F.when(
-        (na > 0) & (nb > 0),
-        F.round(
-            dot.cast("double")
-            / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))),
-            6,
-        ),
-    ).otherwise(F.lit(0.0))
-    rr = (
-        cands.join(nbr, "neighbor_id")
-        .join(F.broadcast(qs), "query_id")
-        .select("query_id", "neighbor_id", cos.alias("cos_sim"))
-    )
-    we = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        rr.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= SIM_K)
-        .drop("rn")
-        .orderBy("query_id", F.desc("cos_sim"), "neighbor_id")
-    )
+    return _rerank(qv, cands).orderBy("query_id", F.desc("cos_sim"), "neighbor_id")
 
 
 _PQ_INT_SQL = f"""
@@ -1048,120 +1151,35 @@ ORDER BY query_id, cos_sim DESC, neighbor_id
 """
 
 
-IVF_INT_K = 16  # coarse cells of the integer IVF twin
-IVF_INT_NPROBE = 4  # cells probed per query
-
-
 def similarity_ann_ivf_int(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORACLE-EXACT integer twin of ``similarity_ann_ivf`` — the
-    ``similarity_pq_int`` discipline applied to the IVF family: the
-    same partition → probe → re-rank dataflow carried out entirely
-    in fixed-point integer arithmetic so DuckDB replays the PIPELINE
-    and the driver's hash compare pins every stage — centroid
-    choice, cell assignment ties, probe-set cut, re-rank order. The
-    float ``similarity_ann_ivf``/`_trained`` remain the production
-    entries (GEMM assignment, recall gates in tests); this twin is
-    the driver-checkable contract that the IVF *algorithm* is right.
+    """Oracle-exact IVF: partition → probe → re-rank carried out
+    entirely in fixed-point integer arithmetic, so DuckDB replays the
+    PIPELINE and the oracle gate's hash compare pins every stage —
+    centroid choice, cell assignment ties, probe-set cut, re-rank
+    order. ``batch_mix`` times it, and it is the dense leg of
+    ``rank_fusion_rrf_ann``; the float ``similarity_ann_ivf`` runs
+    the same dataflow rows-only.
 
     Determinism: vectors quantize once at PQ_INT_SCALE; coarse
-    centroids are the IVF_INT_K vectors with the smallest
-    ``(md5(vec_id), vec_id)`` — the ``embedding_kmeans`` init
-    pattern, md5 because both engines compute it on identical
-    strings; assignment is argmin of squared-L2 in exact BIGINTs
-    with (d2, cid) tie-break; queries probe their IVF_INT_NPROBE
-    nearest cells; the re-rank cosine is one sqrt/multiply/divide on
-    exactly-cast doubles (zero-norm guarded), round(·, 6) last.
+    centroids are the IVF_INT_K-vector ``_centroid_sample`` (the
+    ``embedding_kmeans`` init); assignment is argmin of squared-L2
+    in exact BIGINTs with (d2, cid) tie-break; queries probe their
+    IVF_INT_NPROBE nearest cells; the re-rank is ``_int_cos``.
 
-    Scale shape identical to the float IVF: the K-centroid relation
-    folds to ONE broadcast row, assignment is fully narrow
-    (array_min over per-centroid structs — zero shuffle of the n×K
-    product), the probe is a cell equi-join bounded by nprobe × cell
+    Scale shape: the K-centroid relation folds to ONE broadcast row,
+    assignment is fully narrow (zero shuffle of the n×K product),
+    the probe is a cell equi-join bounded by nprobe × cell
     population, and only candidates reach the re-rank. No all-pairs
     stage anywhere.
 
     Output: query_id, neighbor_id, cos_sim (round 6).
     """
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qv = track_persist(
-        emb.select(
-            "vec_id",
-            F.expr(
-                "transform(embedding, x -> "
-                f"cast(round(cast(x as double) * {PQ_INT_SCALE}) as bigint))"
-            ).alias("q"),
-        )
-    )
-    init_order = [F.md5(F.col("vec_id").cast("string")), F.col("vec_id")]
-    w_init = Window.orderBy(*init_order)
-    cents = (
-        qv.orderBy(*init_order)
-        .limit(IVF_INT_K)
-        .select(
-            (F.row_number().over(w_init) - 1).cast("long").alias("cid"),
-            F.col("q").alias("cq"),
-        )
-    )
-    carr = cents.agg(F.collect_list(F.struct("cid", "cq")).alias("cents"))
-    # per-vector sorted (d2, cid) struct array: struct comparison is
-    # the (distance, cell-id) tie-break; sorting the K-array is O(K
-    # log K) per row with K a constant 16 — still fully narrow
-    ds = F.array_sort(
-        F.transform(
-            "cents",
-            lambda c: F.struct(
-                F.aggregate(
-                    F.zip_with("q", c["cq"], lambda a, b: (a - b) * (a - b)),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ).alias("d2"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )
+    qv = track_persist(_quantize(table(spark, sf_dir, "embeddings")))
     assigned = track_persist(
-        qv.crossJoin(F.broadcast(carr)).select("vec_id", "q", ds.alias("ds"))
+        _ranked_centroids(qv, _centroid_sample(qv, IVF_INT_K))
     )
-    index = assigned.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("q").alias("nq"),
-        F.col("ds")[0]["cid"].alias("cell"),
-    )
-    probes = (
-        assigned.where(F.col("vec_id") < SIM_N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("q").alias("qq"),
-            F.explode(
-                F.expr(f"transform(slice(ds, 1, {IVF_INT_NPROBE}), s -> s.cid)")
-            ).alias("cell"),
-        )
-    )
-    # a neighbor can surface via several probed cells only if cells
-    # were equal — cid is unique per cell, so (query, neighbor) pairs
-    # are already distinct; the join is bounded by nprobe × cell size
-    cands = probes.join(index, "cell").where(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    dot = F.expr("aggregate(zip_with(qq, nq, (a, b) -> a * b), 0L, (s, x) -> s + x)")
-    na = F.expr("aggregate(qq, 0L, (s, x) -> s + x * x)")
-    nb = F.expr("aggregate(nq, 0L, (s, x) -> s + x * x)")
-    cos = F.when(
-        (na > 0) & (nb > 0),
-        F.round(
-            dot.cast("double")
-            / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))),
-            6,
-        ),
-    ).otherwise(F.lit(0.0))
-    rr = cands.select("query_id", "neighbor_id", cos.alias("cos_sim"))
-    we = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        rr.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= SIM_K)
-        .drop("rn")
-        .orderBy("query_id", F.desc("cos_sim"), "neighbor_id")
+    return _cos_topk(_ivf_candidates(assigned)).orderBy(
+        "query_id", F.desc("cos_sim"), "neighbor_id"
     )
 
 
@@ -1257,52 +1275,13 @@ def similarity_ann_ivfpq_int(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: query_id, neighbor_id, cos_sim (round 6).
     """
-    sub_d = EMB_DIM // PQ_M
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qv = track_persist(
-        emb.select(
-            "vec_id",
-            F.expr(
-                "transform(embedding, x -> "
-                f"cast(round(cast(x as double) * {PQ_INT_SCALE}) as bigint))"
-            ).alias("q"),
-        )
-    )
-    init_order = [F.md5(F.col("vec_id").cast("string")), F.col("vec_id")]
-    w_init = Window.orderBy(*init_order)
-    cents = track_persist(
-        qv.orderBy(*init_order)
-        .limit(IVF_INT_K)
-        .select(
-            (F.row_number().over(w_init) - 1).cast("long").alias("cid"),
-            F.col("q").alias("cq"),
-        )
-    )
-    carr = cents.agg(F.collect_list(F.struct("cid", "cq")).alias("cents"))
-    ds = F.array_sort(
-        F.transform(
-            "cents",
-            lambda c: F.struct(
-                F.aggregate(
-                    F.zip_with("q", c["cq"], lambda a, b: (a - b) * (a - b)),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ).alias("d2"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )
-    withcell = (
-        qv.crossJoin(F.broadcast(carr))
-        .withColumn("ds", ds)
-        .select(
-            "vec_id",
-            "q",
-            F.col("ds")[0]["cid"].alias("cell"),
-            F.expr(
-                f"transform(slice(ds, 1, {IVF_INT_NPROBE}), s -> s.cid)"
-            ).alias("probe_cells"),
-        )
+    qv = track_persist(_quantize(table(spark, sf_dir, "embeddings")))
+    cents = track_persist(_centroid_sample(qv, IVF_INT_K))
+    withcell = _ranked_centroids(qv, cents).select(
+        "vec_id",
+        "q",
+        F.col("ds")[0]["cid"].alias("cell"),
+        _probe_cells().alias("probe_cells"),
     )
     # residual w.r.t. the OWN cell's centroid (16-row broadcast join)
     resid = track_persist(
@@ -1318,18 +1297,7 @@ def similarity_ann_ivfpq_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = resid.where(F.col("vec_id") < PQ_K).select(
         F.col("vec_id").alias("k"), F.col("r").alias("rc")
     )
-    d2_arr = F.expr(
-        f"transform(sequence(0, {PQ_M - 1}), m -> "
-        f"aggregate(slice(zip_with(r, rc, (a, b) -> (a - b) * (a - b)), "
-        f"m * {sub_d} + 1, {sub_d}), 0L, (acc, x) -> acc + x))"
-    )
-    codes = (
-        resid.crossJoin(F.broadcast(cb))
-        .select("vec_id", "k", F.posexplode(d2_arr).alias("m", "d2"))
-        .groupBy("vec_id", "m")
-        .agg(F.min(F.struct("d2", "k")).alias("mk"))  # ties → lowest code
-        .select("vec_id", "m", F.col("mk.k").alias("code"))
-    )
+    codes = _pq_encode(resid, "r", cb, "rc")
     # per-(query, probed-cell) residual → per-cell ADC table
     probes_r = (
         resid.where(F.col("vec_id") < SIM_N_QUERIES)
@@ -1345,62 +1313,22 @@ def similarity_ann_ivfpq_int(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("zip_with(qq, cq, (a, b) -> a - b)").alias("rq"),
         )
     )
-    ip_arr = F.expr(
-        f"transform(sequence(0, {PQ_M - 1}), m -> "
-        f"aggregate(slice(zip_with(rq, rc, (a, b) -> a * b), "
-        f"m * {sub_d} + 1, {sub_d}), 0L, (acc, x) -> acc + x))"
-    )
-    lut = (
-        probes_r.crossJoin(F.broadcast(cb))
-        .select("query_id", "pcell", "k", F.posexplode(ip_arr).alias("m", "ip"))
+    lut = probes_r.crossJoin(F.broadcast(cb)).select(
+        "query_id",
+        "pcell",
+        "k",
+        F.posexplode(_pq_sums("rq", "rc", "a * b")).alias("m", "ip"),
     )
     ncodes = codes.join(resid.select("vec_id", "cell"), "vec_id")
-    approx = (
+    cands = _adc_candidates(
         ncodes.join(
             F.broadcast(lut),
             (F.col("cell") == F.col("pcell"))
             & (ncodes["m"] == lut["m"])
             & (F.col("code") == F.col("k")),
         )
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("ip").alias("approx"))
     )
-    wa = Window.partitionBy("query_id").orderBy(F.desc("approx"), F.asc("vec_id"))
-    cands = (
-        approx.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") <= PQ_CAND)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    nbr = qv.select(F.col("vec_id").alias("neighbor_id"), F.col("q").alias("nq"))
-    qs = qv.where(F.col("vec_id") < SIM_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qq")
-    )
-    dot = F.expr("aggregate(zip_with(qq, nq, (a, b) -> a * b), 0L, (s, x) -> s + x)")
-    na = F.expr("aggregate(qq, 0L, (s, x) -> s + x * x)")
-    nb = F.expr("aggregate(nq, 0L, (s, x) -> s + x * x)")
-    cos = F.when(
-        (na > 0) & (nb > 0),
-        F.round(
-            dot.cast("double")
-            / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))),
-            6,
-        ),
-    ).otherwise(F.lit(0.0))
-    rr = (
-        cands.join(nbr, "neighbor_id")
-        .join(F.broadcast(qs), "query_id")
-        .select("query_id", "neighbor_id", cos.alias("cos_sim"))
-    )
-    we = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        rr.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= SIM_K)
-        .drop("rn")
-        .orderBy("query_id", F.desc("cos_sim"), "neighbor_id")
-    )
+    return _rerank(qv, cands).orderBy("query_id", F.desc("cos_sim"), "neighbor_id")
 
 
 _ANN_IVFPQ_INT_SQL = f"""
@@ -1501,42 +1429,9 @@ ORDER BY query_id, cos_sim DESC, neighbor_id
 def _int_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact integer-cosine top-SIM_K per probe query — the ground
     truth the ANN twins are measured against (the full-dim ranking
-    of ``matryoshka_overlap``, factored for reuse)."""
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qv = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> "
-            f"cast(round(cast(x as double) * {PQ_INT_SCALE}) as bigint))"
-        ).alias("q"),
-    )
-    qs = qv.where(F.col("vec_id") < SIM_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qq")
-    )
-    pairs = F.broadcast(qs).join(
-        qv.select(F.col("vec_id").alias("neighbor_id"), F.col("q").alias("nq")),
-        F.col("neighbor_id") != F.col("query_id"),
-    )
-    dot = F.expr("aggregate(zip_with(qq, nq, (a, b) -> a * b), 0L, (s, x) -> s + x)")
-    na = F.expr("aggregate(qq, 0L, (s, x) -> s + x * x)")
-    nb = F.expr("aggregate(nq, 0L, (s, x) -> s + x * x)")
-    cos = F.when(
-        (na > 0) & (nb > 0),
-        F.round(
-            dot.cast("double")
-            / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))),
-            6,
-        ),
-    ).otherwise(F.lit(0.0))
-    scored = pairs.select("query_id", "neighbor_id", cos.alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= SIM_K)
-        .select("query_id", "neighbor_id")
-    )
+    of ``matryoshka_overlap``)."""
+    qv = _quantize(table(spark, sf_dir, "embeddings"))
+    return _cos_topk(_query_pairs(qv)).select("query_id", "neighbor_id")
 
 
 def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1654,76 +1549,20 @@ IVF_IMB_DEN = 4
 IVF_RETRAIN_ITERS = 2  # Lloyd rounds per retrain, from gen-0 centroids
 
 
-def _ivf_assign_ds(qv: DataFrame, cents_df: DataFrame) -> DataFrame:
-    """Per-vector SORTED (d2, cid) struct array under the given
-    centroids — the ``similarity_ann_ivf_int`` assignment stage,
-    factored so the retrain loop can run it per generation. Fully
-    narrow: centroids fold to ONE broadcast row."""
-    carr = cents_df.agg(F.collect_list(F.struct("cid", "cq")).alias("cents"))
-    ds = F.array_sort(
-        F.transform(
-            "cents",
-            lambda c: F.struct(
-                F.aggregate(
-                    F.zip_with("q", c["cq"], lambda a, b: (a - b) * (a - b)),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ).alias("d2"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )
-    return qv.crossJoin(F.broadcast(carr)).select("vec_id", "q", ds.alias("ds"))
-
-
-def _ivf_gen_summary(spark, sf_dir, gen, assigned, exact):
-    """One summary row for a generation's index: cell balance + the
-    retrieval recall of its nprobe-probed top-K vs the exact
-    ranking (the ann_recall_report measurement folded to one int)."""
-    cells = assigned.select(F.col("ds")[0]["cid"].alias("cell"))
-    stats = cells.groupBy("cell").count().agg(
+def _ivf_gen_summary(gen, assigned, exact):
+    """One summary row for a generation's index (``_ranked_centroids``
+    rows): cell balance + the retrieval recall of its nprobe-probed
+    top-K vs the exact ranking (the ann_recall_report measurement
+    folded to one int)."""
+    stats = assigned.groupBy(F.col("ds")[0]["cid"].alias("cell")).count().agg(
         F.count(F.lit(1)).alias("n_cells"),
         F.max("count").alias("max_n"),
         F.sum("count").alias("total_n"),
     )
-    index = assigned.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("q").alias("nq"),
-        F.col("ds")[0]["cid"].alias("cell"),
-    )
-    probes = assigned.where(F.col("vec_id") < SIM_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qq"),
-        F.explode(
-            F.expr(f"transform(slice(ds, 1, {IVF_INT_NPROBE}), s -> s.cid)")
-        ).alias("cell"),
-    )
-    cands = probes.join(index, "cell").where(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    dot = F.expr(
-        "aggregate(zip_with(qq, nq, (a, b) -> a * b), 0L, (s, x) -> s + x)"
-    )
-    na = F.expr("aggregate(qq, 0L, (s, x) -> s + x * x)")
-    nb = F.expr("aggregate(nq, 0L, (s, x) -> s + x * x)")
-    cos = F.when(
-        (na > 0) & (nb > 0),
-        F.round(
-            dot.cast("double")
-            / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))),
-            6,
-        ),
-    ).otherwise(F.lit(0.0))
-    we = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    topk = (
-        cands.select("query_id", "neighbor_id", cos.alias("cos_sim"))
-        .withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= SIM_K)
-    )
-    hits = topk.join(exact, ["query_id", "neighbor_id"]).agg(
-        F.count(F.lit(1)).alias("recall_hits")
+    hits = (
+        _cos_topk(_ivf_candidates(assigned))
+        .join(exact, ["query_id", "neighbor_id"])
+        .agg(F.count(F.lit(1)).alias("recall_hits"))
     )
     return stats.crossJoin(hits).select(
         F.lit(gen).cast("long").alias("gen"),
@@ -1771,69 +1610,33 @@ def ivf_retrain_loop(
         read_manifest_table,
     )
 
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qv = track_persist(
-        emb.select(
-            "vec_id",
-            F.expr(
-                "transform(embedding, x -> "
-                f"cast(round(cast(x as double) * {PQ_INT_SCALE}) as bigint))"
-            ).alias("q"),
-        )
-    )
-    init_order = [F.md5(F.col("vec_id").cast("string")), F.col("vec_id")]
-    w_init = Window.orderBy(*init_order)
-    cents0 = (
-        qv.orderBy(*init_order)
-        .limit(IVF_INT_K)
-        .select(
-            (F.row_number().over(w_init) - 1).cast("long").alias("cid"),
-            F.col("q").alias("cq"),
-        )
-    )
+    qv = track_persist(_quantize(table(spark, sf_dir, "embeddings")))
     path = index_path or os.path.join(scratch_dir("ivf_index_"), "centroids")
     spark.dataSource.register(ManifestParquetSink)
-    cents0.coalesce(1).write.format("mr_manifest").mode("overwrite").option(
-        "path", path
-    ).save()
+
+    def commit(cents: DataFrame) -> DataFrame:
+        """Overwrite the index with ``cents``; the corpus assigned
+        against the COMMITTED generation."""
+        cents.coalesce(1).write.format("mr_manifest").mode("overwrite").option(
+            "path", path
+        ).save()
+        return _ranked_centroids(qv, read_manifest_table(spark, path))
 
     exact = track_persist(_int_exact_topk(spark, sf_dir))
-    a0 = track_persist(_ivf_assign_ds(qv, read_manifest_table(spark, path)))
-    rows = _ivf_gen_summary(spark, sf_dir, 0, a0, exact)
+    a0 = track_persist(commit(_centroid_sample(qv, IVF_INT_K)))
+    rows = _ivf_gen_summary(0, a0, exact)
 
     # control-plane scalar: does gen 0 breach the balance ratio?
     st = (
-        a0.select(F.col("ds")[0]["cid"].alias("cell"))
-        .groupBy("cell")
+        a0.groupBy(F.col("ds")[0]["cid"].alias("cell"))
         .count()
         .agg(F.max("count").alias("mx"), F.sum("count").alias("tot"))
         .collect()[0]
     )
     if st.mx * IVF_INT_K * IVF_IMB_DEN > IVF_IMB_NUM * st.tot:
         cents = read_manifest_table(spark, path).select("cid", "cq")
-        for _ in range(IVF_RETRAIN_ITERS):
-            assigned = _kmeans_assign(qv, cents)
-            dims = assigned.select("cid", F.posexplode("q").alias("dim", "v"))
-            means = dims.groupBy("cid", "dim").agg(
-                F.round(F.sum("v") / F.count(F.lit(1))).cast("long").alias("c")
-            )
-            cents = (
-                means.groupBy("cid")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(F.struct("dim", "c"))
-                    ).alias("s")
-                )
-                .select("cid", F.transform("s", lambda x: x["c"]).alias("cq"))
-                .localCheckpoint()
-            )
-        cents.coalesce(1).write.format("mr_manifest").mode(
-            "overwrite"
-        ).option("path", path).save()
-        a1 = _ivf_assign_ds(qv, read_manifest_table(spark, path))
-        rows = rows.unionByName(
-            _ivf_gen_summary(spark, sf_dir, 1, a1, exact)
-        )
+        a1 = commit(_lloyd(qv, cents, IVF_RETRAIN_ITERS))
+        rows = rows.unionByName(_ivf_gen_summary(1, a1, exact))
     return rows.orderBy("gen")
 
 
@@ -1985,68 +1788,31 @@ def matryoshka_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: query_id, n_overlap (0..SIM_K).
     """
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qv = track_persist(
-        emb.select(
-            "vec_id",
-            F.expr(
-                "transform(embedding, x -> "
-                f"cast(round(cast(x as double) * {PQ_INT_SCALE}) as bigint))"
-            ).alias("q"),
-        )
-    )
-    qs = qv.where(F.col("vec_id") < SIM_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qq")
-    )
-    pairs = F.broadcast(qs).join(
-        qv.select(F.col("vec_id").alias("neighbor_id"), F.col("q").alias("nq")),
-        F.col("neighbor_id") != F.col("query_id"),
-    )
-
-    def _cos(qc: str, nc: str) -> Column:
-        dot = F.expr(
-            f"aggregate(zip_with({qc}, {nc}, (a, b) -> a * b), 0L, (s, x) -> s + x)"
-        )
-        na = F.expr(f"aggregate({qc}, 0L, (s, x) -> s + x * x)")
-        nb = F.expr(f"aggregate({nc}, 0L, (s, x) -> s + x * x)")
-        return F.when(
-            (na > 0) & (nb > 0),
-            F.round(
-                dot.cast("double")
-                / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))),
-                6,
-            ),
-        ).otherwise(F.lit(0.0))
-
+    qv = track_persist(_quantize(table(spark, sf_dir, "embeddings")))
     scored = track_persist(
-        pairs.withColumn("qt", F.expr(f"slice(qq, 1, {MRL_DIM})"))
+        _query_pairs(qv)
+        .withColumn("qt", F.expr(f"slice(qq, 1, {MRL_DIM})"))
         .withColumn("nt", F.expr(f"slice(nq, 1, {MRL_DIM})"))
         .select(
             "query_id",
             "neighbor_id",
-            _cos("qq", "nq").alias("cos_full"),
-            _cos("qt", "nt").alias("cos_trunc"),
+            _int_cos("qq", "nq").alias("cos_full"),
+            _int_cos("qt", "nt").alias("cos_trunc"),
         )
     )
-
-    def _topk(col: str) -> DataFrame:
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc(col), F.asc("neighbor_id")
-        )
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= SIM_K)
-            .select("query_id", "neighbor_id")
-        )
-
     overlap = (
-        _topk("cos_full")
-        .join(_topk("cos_trunc"), ["query_id", "neighbor_id"])
+        _topk(scored, "cos_full", SIM_K)
+        .select("query_id", "neighbor_id")
+        .join(
+            _topk(scored, "cos_trunc", SIM_K).select("query_id", "neighbor_id"),
+            ["query_id", "neighbor_id"],
+        )
         .groupBy("query_id")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
     )
     return (
-        qs.select("query_id")
+        _queries(qv)
+        .select("query_id")
         .join(overlap, "query_id", "left")
         .select(
             "query_id",
@@ -2156,16 +1922,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: vec_id, cell, dup_of, pruned — one row per vector.
     """
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qv = track_persist(
-        emb.select(
-            "vec_id",
-            F.expr(
-                "transform(embedding, x -> "
-                f"cast(round(cast(x as double) * {PQ_INT_SCALE}) as bigint))"
-            ).alias("q"),
-        )
-    )
+    qv = track_persist(_quantize(table(spark, sf_dir, "embeddings")))
     nrow = qv.agg(
         F.length(
             F.bin(
@@ -2178,9 +1935,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = qv.where(F.col("vec_id") < SEMDEDUP_MAX_PLANES).select(
         F.col("vec_id").alias("j"), F.col("q").alias("h")
     )
-    dot_h = F.expr(
-        "aggregate(zip_with(q, h, (a, b) -> a * b), 0L, (s, x) -> s + x)"
-    )
+    dot_h = _int_dot("q", "h")
     # 30·n narrow rows → one hash aggregate; the b-bit prefix mask is
     # a VALUE from the broadcast 1-row scalar, so the plan structure
     # is static while the cell count adapts to the corpus
@@ -2211,25 +1966,16 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("b_id"),
         F.col("q").alias("qb"),
     )
-    dot = F.expr("aggregate(zip_with(qa, qb, (a, b) -> a * b), 0L, (s, x) -> s + x)")
-    na = F.expr("aggregate(qa, 0L, (s, x) -> s + x * x)")
-    nb = F.expr("aggregate(qb, 0L, (s, x) -> s + x * x)")
-    cos = F.round(
-        dot.cast("double") / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))),
-        6,
-    )
     dup = (
         av.join(
             bv,
             (F.col("cell") == F.col("cell_b")) & (F.col("a_id") < F.col("b_id")),
         )
-        # zero-norm guard (the similarity_pq_int discipline): an
-        # all-zero embedding has no direction, so cosine is 0/0 —
-        # NaN in Spark, NULL in DuckDB, i.e. ENGINE-DIVERGENT if it
-        # ever reached the threshold compare. Such vectors can never
-        # be semantic duplicates; drop their pairs on both sides.
-        .where((na > F.lit(0)) & (nb > F.lit(0)))
-        .select("a_id", "b_id", cos.alias("cos_sim"))
+        # an all-zero embedding has no direction (cosine 0/0 — a
+        # DIVIDE_BY_ZERO error in Spark, NULL in DuckDB): _int_cos
+        # scores its pairs 0.0, below the threshold, and the oracle
+        # drops them by their zero norm
+        .select("a_id", "b_id", _int_cos("qa", "qb").alias("cos_sim"))
         .where(F.col("cos_sim") >= EMB_DEDUP_THRESHOLD)
         .groupBy("b_id")
         .agg(F.min("a_id").alias("dup_of"))
@@ -3964,16 +3710,7 @@ def ann_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights = _ann_lsh_weights()
     emb = table(spark, sf_dir, "embeddings")
     band_bits = _ann_band_bits(emb.count())
-    q = emb.select(
-        "vec_id",
-        # cast float32 → double BEFORE the multiply: float×int stays
-        # float32 in Spark but DuckDB computes wider — promoting first
-        # makes the product exact (24-bit mantissa × 1e6 ≤ 44 bits) and
-        # thus bit-identical in both engines
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * ANN_LSH_QUANT).cast("long")
-        ).alias("qe"),
-    )
+    q = _quantize(emb, ANN_LSH_QUANT).select("vec_id", F.col("q").alias("qe"))
     # 64 sign bits via one Arrow-batched int64 GEMM per partition
     # (W is a constant 64×64 matrix, closure-captured — same shape as
     # the IVF assignment GEMM). Expressing the 4096 multiply-adds as
@@ -4037,6 +3774,9 @@ def ann_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (F.col("band_id") == 0)
         )
     )
+    # Not _int_cos: this cosine has no zero-norm guard and neither has
+    # its oracle (_ANN_LSH), which scores a zero-norm pair NULL where
+    # this division raises (ANSI); _int_cos's 0.0 would match neither.
     dot = F.aggregate(
         F.zip_with("qa", "qb", lambda x, y: x * y),
         F.lit(0).cast("long"),
@@ -8948,15 +8688,8 @@ def similarity_topk_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: query_id, rank, neighbor_id, mmr_score (round 6;
     rank 1's score is the raw query cosine — no selected set yet).
     """
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qv = track_persist(
-        emb.select(
-            "vec_id",
-            F.expr(
-                "transform(embedding, x -> "
-                f"cast(round(cast(x as double) * {PQ_INT_SCALE}) as bigint))"
-            ).alias("q"),
-        ).select(
+        _quantize(table(spark, sf_dir, "embeddings")).select(
             "vec_id",
             "q",
             F.expr(
@@ -8964,6 +8697,10 @@ def similarity_topk_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("nrm"),
         )
     )
+    # Not _int_cos: the MMR blend and both rank windows read the
+    # UNROUNDED cosine (rounding to 6 places first would merge
+    # near-ties and move picks, and the oracle mirrors this form), and
+    # the norms come precomputed per vector for the pool pair matrix.
     cos = (
         "CASE WHEN {na} = 0 OR {nb} = 0 THEN CAST(0.0 AS DOUBLE)"
         " ELSE CAST(aggregate(zip_with({qa}, {qb}, (a, b) -> a * b),"
@@ -9529,14 +9266,7 @@ def decontaminate_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qv = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> "
-            f"cast(round(cast(x as double) * {PQ_INT_SCALE}) as bigint))"
-        ).alias("q"),
-    )
+    qv = _quantize(table(spark, sf_dir, "embeddings"))
     is_eval = F.col("vec_id") % DECON_EVAL_MOD == 0
     ev_row = (
         qv.where(is_eval)
@@ -9769,12 +9499,7 @@ def similarity_binary_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(0 AS BIGINT)))"
         )
 
-    qv = F.expr(
-        f"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {BQ_SCALE}) AS BIGINT))"
-    )
-    codes = emb.select(
-        "vec_id", half(0).alias("b0"), half(32).alias("b1"), qv.alias("q")
-    )
+    codes = _quantize(emb, BQ_SCALE, half(0).alias("b0"), half(32).alias("b1"))
     queries = F.broadcast(
         codes.filter(F.col("vec_id") < SIM_N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
@@ -9793,10 +9518,7 @@ def similarity_binary_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             ham.alias("hamming"),
-            F.expr(
-                "aggregate(zip_with(qq, q, (a, b) -> a * b), "
-                "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-            ).alias("dot_scaled"),
+            _int_dot("qq", "q").alias("dot_scaled"),
         )
     )
     wham = Window.partitionBy("query_id").orderBy(

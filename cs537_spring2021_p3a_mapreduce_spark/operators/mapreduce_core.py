@@ -10,6 +10,7 @@ columns each plan needs (column pruning reaches the parquet footer).
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1552,7 +1553,8 @@ def manifest_bloom_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-file BLOOM-FILTER index for equality-probe FILE SKIPPING
     (``sources/manifest_sink.build_bloom_index`` — Delta's Bloom
     filter index / Iceberg's Puffin blobs): orders land
-    priority-clustered (one append per priority ⇒ 5 files), so every
+    priority-clustered (one file per priority, checked on the
+    committed zone maps — the query raises otherwise), so every
     file spans the FULL o_orderkey range and zone maps cannot prune a
     point lookup — the committed per-file bloom (65536 bits, 7 ×
     xxhash64, built by one distributed scan whose shuffle is at most
@@ -1569,6 +1571,7 @@ def manifest_bloom_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: o_orderkey, o_orderpriority, cents, pruned.
     """
     from ..sources.manifest_sink import (
+        MANIFEST,
         ManifestParquetSink,
         bloom_prune_files,
         build_bloom_index,
@@ -1596,6 +1599,18 @@ def manifest_bloom_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders.repartition(8, "o_orderpriority").write.format(
         "mr_manifest"
     ).option("path", path).mode("append").save()
+    # That layout rests on a hash coincidence, so check it on the
+    # committed zone maps (no Spark job): a file whose priority range
+    # is not a point means two priorities shared a bucket.
+    with open(os.path.join(path, MANIFEST), encoding="utf-8") as fh:
+        for e in json.load(fh)["files"]:
+            lo, hi = e["stats"]["o_orderpriority"]
+            if lo != hi:
+                raise RuntimeError(
+                    f"manifest_bloom_point: {e['file']} holds priorities "
+                    f"{lo!r}..{hi!r}; the one-file-per-priority layout "
+                    "needs each priority in its own hash bucket"
+                )
     build_bloom_index(spark, path, "o_orderkey")
     lo, hi = orders.agg(
         F.min("o_orderkey"), F.max("o_orderkey")

@@ -1972,11 +1972,12 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse cell right there (the posting-list append a vector DB
     does per insert), so the batch index (`similarity_ann_ivf_int`)
     stays warm without nightly rebuilds. Centroids come from the
-    same deterministic md5-ordered sample the batch twin trains
-    (the trained-codebook seam), folded to ONE row and
-    stream-static-broadcast onto the vector stream; assignment is
-    the twin's narrow struct-argmin with (d2, cid) ties — per-row,
-    stateless, no shuffle before the per-cell rollup.
+    deterministic md5-ordered sample the batch IVF uses
+    (``llm._centroid_sample``, the trained-codebook seam), folded to
+    ONE row and stream-static-broadcast onto the vector stream;
+    assignment is the vector kernel's ``_nearest_centroid`` —
+    ``array_min`` over (d2, cid) structs, per-row, stateless, no
+    shuffle before the per-cell rollup.
 
     The output is the index maintenance summary a deploy monitors:
     per cell, how many vectors landed and the smallest id (cell
@@ -1990,52 +1991,23 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid
 
-    from ..operators.llm import IVF_INT_K, PQ_INT_SCALE
+    from ..operators.llm import (
+        IVF_INT_K,
+        _centroid_sample,
+        _nearest_centroid,
+        _quantize,
+    )
 
     work = scratch_dir("stream_ivf_")
     src = os.path.join(work, "in")
     os.makedirs(src, exist_ok=True)
     _copy_table_files(sf_dir, "embeddings", src)
-    schema = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).schema
-
-    # batch-side centroid build (the trained index being maintained)
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    qv = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> "
-            f"cast(round(cast(x as double) * {PQ_INT_SCALE}) as bigint))"
-        ).alias("q"),
-    )
-    from pyspark.sql.window import Window
-
-    init_order = [F.md5(F.col("vec_id").cast("string")), F.col("vec_id")]
-    w_init = Window.orderBy(*init_order)
-    cents = (
-        qv.orderBy(*init_order)
-        .limit(IVF_INT_K)
-        .select(
-            (F.row_number().over(w_init) - 1).cast("long").alias("cid"),
-            F.col("q").alias("cq"),
-        )
-    )
-    carr = cents.agg(F.collect_list(F.struct("cid", "cq")).alias("cents"))
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    sq = stream.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> "
-            f"cast(round(cast(x as double) * {PQ_INT_SCALE}) as bigint))"
-        ).alias("q"),
-    )
-    assigned = sq.crossJoin(F.broadcast(carr)).select(
-        "vec_id",
-        F.expr(
-            "array_min(transform(cents, c -> named_struct("
-            "'d2', aggregate(zip_with(q, c.cq, (a, b) -> (a - b) * (a - b)), "
-            "0L, (acc, x) -> acc + x), 'cid', c.cid))).cid"
-        ).alias("cell"),
+    # batch-side centroid build (the trained index being maintained)
+    cents = _centroid_sample(_quantize(emb), IVF_INT_K)
+    stream = spark.readStream.schema(emb.schema).parquet(src)
+    assigned = _nearest_centroid(_quantize(stream), cents).select(
+        "vec_id", F.col("cid").alias("cell")
     )
     out = assigned.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_vectors"),

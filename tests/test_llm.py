@@ -2680,3 +2680,47 @@ def test_mmd_poly_null_vs_planted_shift(spark):
 
     assert r.mmd2_micro == math.floor(max(mmd2, 0.0) * 1_000_000.0)
     assert r.mmd2_micro > 0
+
+
+# Spark-side spellings of the two integer vector-search stages that
+# must exist once, in the kernel section of operators/llm.py. DuckDB
+# oracles spell them with list_transform / q[j] * q[j] and are not
+# matched: each oracle stays an independent statement.
+_QUANTIZE_TEXT = r'(?<!list_)transform\(embedding, x ->|"embedding", lambda x:'
+_INT_COS_NORM_TEXT = r"\+ x \* x\)|lambda x: x \* x"
+# cosines the kernel cannot absorb without changing rows
+_KEPT_COSINES = {
+    "operators/llm.py:ann_lsh_pairs": "no zero-norm guard, like its oracle",
+    "operators/llm.py:similarity_topk_mmr": "unrounded: MMR blends raw cosines",
+}
+
+
+def _text_sites(pattern: str) -> dict[str, int]:
+    """{'<module path>:<top-level def>': matching lines} over the package."""
+    import ast
+    import pathlib
+    import re
+
+    pkg = pathlib.Path("cs537_spring2021_p3a_mapreduce_spark")
+    sites: dict[str, int] = {}
+    for py in sorted(pkg.rglob("*.py")):
+        src = py.read_text()
+        defs = [
+            (n.lineno, n.end_lineno, n.name)
+            for n in ast.parse(src).body
+            if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+        ]
+        for i, line in enumerate(src.splitlines(), 1):
+            if re.search(pattern, line):
+                owner = next((nm for a, b, nm in defs if a <= i <= b), "<module>")
+                key = f"{py.relative_to(pkg).as_posix()}:{owner}"
+                sites[key] = sites.get(key, 0) + 1
+    return sites
+
+
+def test_vector_kernel_stages_written_once():
+    """The fixed-point quantize and the integer cosine live only in the
+    vector kernel; every entry calls them instead of re-typing them."""
+    assert _text_sites(_QUANTIZE_TEXT) == {"operators/llm.py:_quantize": 1}
+    cos = _text_sites(_INT_COS_NORM_TEXT)
+    assert set(cos) == {"operators/llm.py:_int_cos", *_KEPT_COSINES}, cos

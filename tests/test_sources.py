@@ -2144,3 +2144,22 @@ def test_bloom_point_clustered_write_layout(spark, tmp_path):
         assert lo == hi  # priority zone map collapsed to a point
         got_pris.add(lo)
     assert got_pris == pris
+
+
+def test_bloom_point_refuses_a_mixed_priority_file(spark, monkeypatch):
+    """When the hash-clustered append stops giving each priority its
+    own file (here: every row forced into ONE partition), the query
+    raises, naming the file, instead of returning results whose
+    zone-map / bloom contrast no longer means anything."""
+    import pytest
+    from conftest import SF_SMOKE
+
+    from cs537_spring2021_p3a_mapreduce_spark.operators import mapreduce_core
+
+    cls = type(spark.range(1))
+    real = cls.repartition
+    monkeypatch.setattr(
+        cls, "repartition", lambda self, *args, **kw: real(self, 1)
+    )
+    with pytest.raises(RuntimeError, match=r"part-.*holds priorities"):
+        mapreduce_core.manifest_bloom_point(spark, SF_SMOKE)

@@ -16,6 +16,15 @@ decimal/object) as ``WOULD FAIL EXACT HASH``; with ``--exact`` those
 warnings (and epsilon-passing nonzero float diffs) become hard
 failures, mirroring the driver.
 
+Each query runs under a Spark job description equal to its name, and
+its ``--out`` entry carries the node counts of the EXECUTED (post-AQE)
+plans of every SQL execution under that description — eager jobs in
+the operator call included — read from Spark's REST ``/sql`` with
+perfbench's ``plan_counts``: ``exchanges``, ``broadcasts``,
+``python_nodes`` and ``cached_scans``. Streaming micro-batches carry
+their own descriptions, so a drain's batches are not in the counts.
+"No query's plan grew" is then a diff of two artifacts.
+
 Usage: python tools/check_oracles.py [sf_dir] [--exact] [query ...]
 """
 
@@ -24,11 +33,14 @@ from __future__ import annotations
 import math
 import os
 import sys
+import time
 
 import duckdb
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench import trace as tr  # noqa: E402  (stdlib only)
 
 _ARGS = [
     a for a in sys.argv[1:] if a != "--exact" and not a.startswith("--out=")
@@ -131,6 +143,18 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
     return problems
 
 
+def _executed_plan_counts(rest, name: str) -> dict[str, int]:
+    """Plan-node counts of the finished SQL executions described
+    ``name``; waits (bounded) for the listener to mark them done so the
+    final adaptive plan is the one counted."""
+    for _ in range(50):
+        execs = rest.sql_by_description().get(name, [])
+        if all(e.get("status") != "RUNNING" for e in execs):
+            break
+        time.sleep(0.1)
+    return tr.plan_counts(execs)
+
+
 def main() -> int:
     import __spark_entry__ as entrymod
     from pyspark.sql import SparkSession
@@ -152,7 +176,9 @@ def main() -> int:
         .config("spark.driver.memory", "8g")
         .getOrCreate()
     )
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    sc.setLogLevel("WARN")
+    rest = tr.SparkRest(spark)
     con = duck_con(SF_DIR)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -162,6 +188,7 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        sc.setJobDescription(name)
         try:
             spark_pdf = fn(spark, SF_DIR).toPandas()
         except Exception as e:  # noqa: BLE001
@@ -169,10 +196,15 @@ def main() -> int:
             results[name] = {"status": "fail", "error": f"spark: {e}"[:500]}
             failures += 1
             continue
+        finally:
+            sc.setJobDescription(None)
+        plan = _executed_plan_counts(rest, name)
         sql = oracles.get(name)
         if sql is None:
             print(f"ok   {name}: rows-only ({len(spark_pdf)} rows)")
-            results[name] = {"status": "ok_rows_only", "rows": len(spark_pdf)}
+            results[name] = {
+                "status": "ok_rows_only", "rows": len(spark_pdf), **plan
+            }
             continue
         try:
             duck_pdf = con.execute(sql).fetchdf()
@@ -195,12 +227,13 @@ def main() -> int:
                 "status": "fail",
                 "rows": len(spark_pdf),
                 "problems": problems,
+                **plan,
             }
             failures += 1
         else:
             note = "" if not problems else f"  ({problems[0]})"
             print(f"ok   {name}: {len(spark_pdf)} rows{note}")
-            results[name] = {"status": "ok", "rows": len(spark_pdf)}
+            results[name] = {"status": "ok", "rows": len(spark_pdf), **plan}
             if problems:
                 results[name]["notes"] = problems
     print(f"\n{failures} failures")
