@@ -25,7 +25,8 @@ decontamination and ``streaming.stream_ivf_assign`` compose them.
 from __future__ import annotations
 
 import os
-from functools import partial
+from collections.abc import Callable
+from functools import partial, reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -3705,7 +3706,8 @@ def ann_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-band collision p^16 with p = 1 - θ/π); the fixture's weak
     cosines (≤ ~0.46) exercise the machinery, not the recall.
 
-    Output: vec_a, vec_b, cosine (all candidate pairs, re-ranked).
+    Output: vec_a, vec_b, cosine (all candidate pairs, re-ranked;
+    0.0 when either vector has zero norm).
     """
     weights = _ann_lsh_weights()
     emb = table(spark, sf_dir, "embeddings")
@@ -3774,29 +3776,9 @@ def ann_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (F.col("band_id") == 0)
         )
     )
-    # Not _int_cos: this cosine has no zero-norm guard and neither has
-    # its oracle (_ANN_LSH), which scores a zero-norm pair NULL where
-    # this division raises (ANSI); _int_cos's 0.0 would match neither.
-    dot = F.aggregate(
-        F.zip_with("qa", "qb", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    na = F.aggregate(
-        F.transform("qa", lambda x: x * x),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    nb = F.aggregate(
-        F.transform("qb", lambda x: x * x),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return cand.select(
-        "vec_a",
-        "vec_b",
-        F.round(dot / (F.sqrt(na) * F.sqrt(nb)), 6).alias("cosine"),
-    )
+    # zero-norm guarded (_int_cos): two all-zero embeddings set every
+    # sign bit, so they share every band and reach the cosine
+    return cand.select("vec_a", "vec_b", _int_cos("qa", "qb").alias("cosine"))
 
 
 _DECON_SHINGLE_EXPR = " || chr(31) || ".join(
@@ -3937,11 +3919,14 @@ WITH nn AS (
   WHERE a.vec_id < b.vec_id
 )
 SELECT c.vec_a, c.vec_b,
+       CASE WHEN list_sum(list_transform(qa.qe, x -> x * x)) > 0
+             AND list_sum(list_transform(qb.qe, x -> x * x)) > 0 THEN
        round(CAST(list_sum(list_transform(generate_series(1, {EMB_DIM}),
                                           d -> qa.qe[d] * qb.qe[d])) AS BIGINT)
              / (sqrt(CAST(list_sum(list_transform(qa.qe, x -> x * x)) AS BIGINT))
                 * sqrt(CAST(list_sum(list_transform(qb.qe, x -> x * x)) AS BIGINT))),
-             6) AS cosine
+             6)
+       ELSE 0.0 END AS cosine
 FROM cand c
 JOIN q qa ON qa.vec_id = c.vec_a
 JOIN q qb ON qb.vec_id = c.vec_b
@@ -4389,16 +4374,18 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    chars = F.filter(F.split(F.col("word"), ""), lambda c: c != F.lit(""))
-    pair_arr = F.when(
-        F.size(chars) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(chars) - 2),
-            lambda i: F.concat(F.get(chars, i), F.get(chars, i + 1)),
+    # chars is a NAMED column before the pair lambda reads it (see
+    # token_windows): inline, the split re-ran per element access
+    chars = words.select(
+        "n",
+        F.filter(F.split(F.col("word"), ""), lambda c: c != F.lit("")).alias(
+            "chars"
         ),
-    ).otherwise(F.array().cast("array<string>"))
+    )
     return (
-        words.select("n", F.explode(pair_arr).alias("pair"))
+        chars.select(
+            "n", F.explode(token_windows(F.col("chars"), 2, F.concat)).alias("pair")
+        )
         .groupBy("pair")
         .agg(F.sum("n").alias("cnt"))
     )
@@ -4436,11 +4423,37 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: step, left_sym, right_sym, pair_count.
     """
-    # persist the collapsed vocabulary: every merge round's argmax
-    # re-evaluates the whole vocab lineage, which without the persist
-    # re-scans + re-tokenizes + re-aggregates the CORPUS per round
-    # (K rounds → K corpus passes; at 100 TB the corpus pass dwarfs
-    # everything else in this loop)
+    rules, _ = _merge_rounds(
+        spark,
+        sf_dir,
+        BPE_TRAIN_MERGES,
+        lambda syms, pc: pc.orderBy(F.desc("pc"), "a", "b"),
+    )
+    return reduce(lambda a, b: a.unionByName(b), rules)
+
+
+def _merge_rounds(
+    spark: SparkSession,
+    sf_dir: str,
+    n_merges: int,
+    ranked: Callable[[DataFrame, DataFrame], DataFrame],
+) -> tuple[list[DataFrame], DataFrame]:
+    """The merge-training loop shared by BPE (``bpe_train_merges``) and
+    WordPiece (``_wp_rounds``): vocabulary collapse, then per round
+    split every word's marker encoding into symbols, count adjacent
+    pairs over the vocabulary, adopt the first row of
+    ``ranked(syms, pc)`` — the round's (n, syms) rows and its
+    (a, b, pc) pair counts ordered by the trainer's merge objective —
+    and rewrite every encoding with the adopted pair.
+
+    Returns (per-round 1-row rule frames (step, left_sym, right_sym,
+    pair_count, then any further columns ``ranked`` added), the
+    vocabulary after the last rewrite). The final rewrite is lazy: a
+    caller that needs only the rules runs nothing for it."""
+    # persist the collapsed vocabulary: every merge round re-evaluates
+    # the vocab lineage (twice for WordPiece: symbol and pair counts),
+    # which without the persist re-scans + re-tokenizes + re-aggregates
+    # the CORPUS per round
     words = track_persist(
         table(spark, sf_dir, "documents")
         .select(F.explode(tokens("text")).alias("word"))
@@ -4451,52 +4464,49 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = words.select(
         "n", F.regexp_replace("word", "(.)", r"|$1|").alias("enc")
     )
-    best_steps = []
-    for step in range(1, BPE_TRAIN_MERGES + 1):
-        syms = F.split(F.expr("trim(BOTH '|' FROM enc)"), r"\|\|")
-        prs = F.when(
-            F.size(syms) >= 2,
-            F.transform(
-                F.sequence(F.lit(0), F.size(syms) - 2),
-                lambda i: F.struct(
-                    F.get(syms, i).alias("a"), F.get(syms, i + 1).alias("b")
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-        best = (
-            vocab.select("n", F.explode(prs).alias("pr"))
+    rules = []
+    for step in range(1, n_merges + 1):
+        # syms is a NAMED column before the pair lambda reads it:
+        # Catalyst does not CSE into lambda bodies, so an inline
+        # split(trim(enc)) re-ran the regex split per pair element,
+        # O(len²) per word (see token_windows)
+        syms = vocab.select(
+            "n", F.split(F.expr("trim(BOTH '|' FROM enc)"), r"\|\|").alias("syms")
+        )
+        pairs = token_windows(
+            F.col("syms"), 2, lambda a, b: F.struct(a.alias("a"), b.alias("b"))
+        )
+        pc = (
+            syms.select("n", F.explode(pairs).alias("pr"))
             .select("n", "pr.a", "pr.b")
             .groupBy("a", "b")
             .agg(F.sum("n").alias("pc"))
-            .orderBy(F.desc("pc"), "a", "b")
-            .limit(1)
-            .localCheckpoint()  # reused by the result AND the next
-            # round's rewrite — materialize the 1-row argmax once
         )
-        best_steps.append(
+        # eager 1-row argmax: read by the result AND the rewrite, and
+        # keeps the next round's plan shallow (lazy rounds measured
+        # slower)
+        best = ranked(syms, pc).limit(1).localCheckpoint()
+        rules.append(
             best.select(
                 F.lit(step).cast("long").alias("step"),
                 F.col("a").alias("left_sym"),
                 F.col("b").alias("right_sym"),
                 F.col("pc").alias("pair_count"),
+                *best.columns[3:],
             )
         )
-        if step < BPE_TRAIN_MERGES:
-            vocab = (
-                vocab.crossJoin(F.broadcast(best.select("a", "b")))
-                .withColumn(
-                    "enc",
-                    F.expr(
-                        "replace(enc, '|' || a || '||' || b || '|',"
-                        " '|' || a || b || '|')"
-                    ),
-                )
-                .select("n", "enc")
+        vocab = (
+            vocab.crossJoin(F.broadcast(best.select("a", "b")))
+            .withColumn(
+                "enc",
+                F.expr(
+                    "replace(enc, '|' || a || '||' || b || '|',"
+                    " '|' || a || b || '|')"
+                ),
             )
-    out = best_steps[0]
-    for df in best_steps[1:]:
-        out = out.unionByName(df)
-    return out
+            .select("n", "enc")
+        )
+    return rules, vocab
 
 
 def _bpe_train_ctes(n_merges: int = BPE_TRAIN_MERGES) -> list[str]:
@@ -8907,10 +8917,10 @@ WP_SCORE_SCALE = 1_000_000_000  # likelihood-score quantization
 
 def _wp_rounds(spark: SparkSession, sf_dir: str):
     """The WordPiece training loop (Schuster & Nakajima 2012; the
-    BERT tokenizer's trainer): identical dataflow to
-    ``bpe_train_merges`` — vocabulary collapse, per-round pair
+    BERT tokenizer's trainer): the ``_merge_rounds`` loop it shares
+    with ``bpe_train_merges`` — vocabulary collapse, per-round pair
     counting on the marker-wrapped symbol encoding, 1-row argmax,
-    narrow rewrite — except the merge OBJECTIVE: WordPiece adopts
+    narrow rewrite — with its own merge OBJECTIVE: WordPiece adopts
     the pair maximizing the LIKELIHOOD GAIN count(ab)/(count(a)·
     count(b)), not the raw pair count (the reason 'ing' merges early
     in WordPiece but late in BPE). The score quantizes to
@@ -8919,48 +8929,18 @@ def _wp_rounds(spark: SparkSession, sf_dir: str):
     ties break (score DESC, a, b) — deterministic across engines
     and partitionings.
 
-    Returns (per-step 1-row best DataFrames, the FINAL rewritten
-    vocabulary) — the latter feeds ``wordpiece_encode``.
+    Returns ``_merge_rounds``' (per-step 1-row rule frames with
+    ``score_q``, the FINAL rewritten vocabulary) — the latter feeds
+    ``wordpiece_encode``.
     """
-    # persisted for the same reason as bpe_train_merges: each round
-    # re-evaluates the vocab lineage TWICE (symbol counts + pair
-    # counts), which without the persist is 2·K corpus passes
-    words = track_persist(
-        table(spark, sf_dir, "documents")
-        .select(F.explode(tokens("text")).alias("word"))
-        .filter(~F.col("word").contains("|"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    vocab = words.select(
-        "n", F.regexp_replace("word", "(.)", r"|$1|").alias("enc")
-    )
-    bests = []
-    for step in range(1, WP_MERGES + 1):
-        syms_col = F.split(F.expr("trim(BOTH '|' FROM enc)"), r"\|\|")
-        with_syms = vocab.select("n", syms_col.alias("syms"))
+
+    def ranked(syms: DataFrame, pc: DataFrame) -> DataFrame:
         symc = (
-            with_syms.select("n", F.explode("syms").alias("sym"))
+            syms.select("n", F.explode("syms").alias("sym"))
             .groupBy("sym")
             .agg(F.sum("n").alias("c"))
         )
-        prs = F.when(
-            F.size("syms") >= 2,
-            F.transform(
-                F.sequence(F.lit(0), F.size("syms") - 2),
-                lambda i: F.struct(
-                    F.get(F.col("syms"), i).alias("a"),
-                    F.get(F.col("syms"), i + 1).alias("b"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-        pc = (
-            with_syms.select("n", F.explode(prs).alias("pr"))
-            .select("n", "pr.a", "pr.b")
-            .groupBy("a", "b")
-            .agg(F.sum("n").alias("pc"))
-        )
-        best = (
+        return (
             pc.join(
                 F.broadcast(
                     symc.select(F.col("sym").alias("a"), F.col("c").alias("ca"))
@@ -8983,30 +8963,9 @@ def _wp_rounds(spark: SparkSession, sf_dir: str):
                 ).alias("score_q"),
             )
             .orderBy(F.desc("score_q"), "a", "b")
-            .limit(1)
-            .localCheckpoint()
         )
-        bests.append(
-            best.select(
-                F.lit(step).cast("long").alias("step"),
-                F.col("a").alias("left_sym"),
-                F.col("b").alias("right_sym"),
-                F.col("pc").alias("pair_count"),
-                "score_q",
-            )
-        )
-        vocab = (
-            vocab.crossJoin(F.broadcast(best.select("a", "b")))
-            .withColumn(
-                "enc",
-                F.expr(
-                    "replace(enc, '|' || a || '||' || b || '|',"
-                    " '|' || a || b || '|')"
-                ),
-            )
-            .select("n", "enc")
-        )
-    return bests, vocab
+
+    return _merge_rounds(spark, sf_dir, WP_MERGES, ranked)
 
 
 def wordpiece_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9026,11 +8985,8 @@ def wordpiece_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: step, left_sym, right_sym, pair_count, score_q.
     """
-    bests, _ = _wp_rounds(spark, sf_dir)
-    out = bests[0]
-    for df in bests[1:]:
-        out = out.unionByName(df)
-    return out
+    rules, _ = _wp_rounds(spark, sf_dir)
+    return reduce(lambda a, b: a.unionByName(b), rules)
 
 
 def wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,6 +12,10 @@ number (32) and AQE coalesces from there; streaming state stores and
 ``foreachBatch`` frames (AQE off) shuffle at
 ``spark.sql.shuffle.partitions``, which ``get_spark`` sets to the
 cores the session got.
+
+Cached relations coalesce too: a ``track_persist``ed plan keeps the
+partitioning AQE chose for it, so a later scan of a small cache runs a
+few tasks instead of one per initial shuffle partition.
 """
 
 from __future__ import annotations
@@ -27,6 +31,13 @@ from pyspark.sql import SparkSession
 # - Batch shuffles start 32 wide (initialPartitionNum); AQE coalesces.
 #   Streaming state and foreachBatch frames get no AQE and shuffle at
 #   shuffle.partitions, which get_spark derives from the cores.
+# - AQE may change a cached plan's output partitioning. Spark's default
+#   (false) caches a relation at the 32 uncoalesced initial partitions,
+#   so every later scan of a persisted intermediate ran 32 near-empty
+#   tasks; with it on, the cache keeps AQE's coalesced width. A cache
+#   that loses its hash partitioning can cost a downstream re-shuffle:
+#   compare the oracle gate's executed-plan counts with and without the
+#   conf (PYSPARK_SUBMIT_ARGS sets it in the gate's vanilla session).
 # - Arrow on: every pandas_udf / applyInPandas crossing is batched.
 # - UTC session timezone: deterministic event-time semantics and
 #   parity with the DuckDB oracle's naive timestamps.
@@ -41,6 +52,7 @@ _SCALE_CONFS: dict[str, str] = {
     "spark.sql.python.filterPushdown.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "32",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # The events fixture stores TIMESTAMP(NANOS) parquet, which Spark
     # has no native type for; read as epoch-nanos long and convert in
     # the catalog (catalog.table) with integer µs truncation — the

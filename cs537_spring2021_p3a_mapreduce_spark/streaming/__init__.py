@@ -1452,7 +1452,7 @@ def _lsh_signatures(docs: DataFrame) -> DataFrame:
     return _lsh_hashed(docs).select(
         "doc_id",
         "ev",
-        *_minhash_int_mins(lambda f: F.array_min(F.transform("hs", f))),
+        *_minhash_int_mins(lambda f: f"array_min(transform(hs, h -> {f('h')}))"),
     )
 
 

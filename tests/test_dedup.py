@@ -189,6 +189,27 @@ def test_simhash_int_finds_exact_copies_and_matches_oracle(spark, planted):
     assert got == want
 
 
+def test_simhash_int_plan_built_in_few_py4j_round_trips(spark):
+    """Building dedup_simhash_int's plan (no job runs) stays cheap on
+    the driver: its 64 per-bit sums and four 16-bit chunk folds are
+    parsed SQL expressions, not ~11k node-by-node py4j calls. About
+    1.1k round trips were measured cold; the bound leaves headroom."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        dedup.dedup_simhash_int(spark, SF)
+    finally:
+        client.send_command = send
+    assert calls[0] < 2_000, calls[0]
+
+
 def test_minhash_agrees_with_ngram_baseline(spark):
     """On the raw corpus, minhash (shingle jaccard ≥0.7) pairs must
     be a superset-of-threshold view consistent with the quadratic

@@ -288,6 +288,33 @@ def test_ann_lsh_pairs_candidates_share_a_band_and_cosines_exact(spark):
         assert abs(r.cosine - round(want, 6)) <= 1e-6
 
 
+def test_ann_lsh_pairs_zero_vectors_match_oracle(spark, tmp_path):
+    """Two all-zero embeddings set every sign bit, so they share every
+    band and reach the cosine: both engines score the pair 0.0 (not an
+    ANSI divide-by-zero in Spark, not NULL in DuckDB), and every other
+    row still matches the oracle."""
+    import os
+
+    import duckdb
+
+    base = spark.read.parquet(f"{SF}/embeddings.parquet")
+    dim = len(base.first().embedding)
+    zeros = spark.createDataFrame(
+        [(8_000, [0.0] * dim, 0), (8_001, [0.0] * dim, 0)], base.schema
+    )
+    d = str(tmp_path / "ann_lsh_zero")
+    base.unionByName(zeros).write.parquet(os.path.join(d, "embeddings.parquet"))
+    got = sorted(tuple(r) for r in llm.ann_lsh_pairs(spark, d).collect())
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{os.path.join(d, 'embeddings.parquet')}/*.parquet')"
+    )
+    want = sorted(tuple(t) for t in con.execute(llm._ANN_LSH).fetchall())
+    assert got == want
+    assert (8_000, 8_001, 0.0) in got
+
+
 def test_trained_ivf_recall_beats_probe_budget(spark):
     """The k-means-trained quantizer must reach ≥ the recall bound
     while probing a SMALLER index fraction than the hash-sample
@@ -2690,7 +2717,6 @@ _QUANTIZE_TEXT = r'(?<!list_)transform\(embedding, x ->|"embedding", lambda x:'
 _INT_COS_NORM_TEXT = r"\+ x \* x\)|lambda x: x \* x"
 # cosines the kernel cannot absorb without changing rows
 _KEPT_COSINES = {
-    "operators/llm.py:ann_lsh_pairs": "no zero-norm guard, like its oracle",
     "operators/llm.py:similarity_topk_mmr": "unrounded: MMR blends raw cosines",
 }
 

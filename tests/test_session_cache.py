@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from cs537_spring2021_p3a_mapreduce_spark.session import (
     _TRACKED_PERSISTS,
     release_persisted,
+    release_tracked,
     track_persist,
 )
 
@@ -70,3 +71,29 @@ def test_session_shuffle_widths(spark):
         spark.sparkContext.defaultParallelism
     )
     assert spark._jsparkSession.sessionState().conf().numShufflePartitions() == 32
+
+
+def test_cached_aggregate_scan_is_coalesced(spark):
+    """A persisted small aggregate keeps the partitioning AQE coalesced
+    it to, so a later scan of it runs a few tasks, not one per initial
+    shuffle partition (32)."""
+    sc = spark.sparkContext
+    df = track_persist(
+        spark.range(400).groupBy((F.col("id") % 300).alias("k")).count()
+    )
+    try:
+        assert df.count() == 300  # materializes the cache
+        sc.setJobGroup("cached-scan-width", "scan a persisted aggregate")
+        try:
+            assert len(df.where(F.col("count") > 0).collect()) == 300
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        tasks = sum(
+            tracker.getStageInfo(stage).numTasks
+            for job in tracker.getJobIdsForGroup("cached-scan-width")
+            for stage in tracker.getJobInfo(job).stageIds
+        )
+    finally:
+        release_tracked(df)
+    assert 0 < tasks < 32, tasks
