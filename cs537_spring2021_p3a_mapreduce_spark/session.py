@@ -11,7 +11,9 @@ Two shuffle widths: batch plans start at AQE's initial partition
 number (32) and AQE coalesces from there; streaming state stores and
 ``foreachBatch`` frames (AQE off) shuffle at
 ``spark.sql.shuffle.partitions``, which ``get_spark`` sets to the
-cores the session got.
+cores the session got. The engine's drains take one rule in any
+session: ``min(spark.sql.shuffle.partitions, defaultParallelism,
+cores)`` (``streaming._drain_width``).
 
 Cached relations coalesce too: a ``track_persist``ed plan keeps the
 partitioning AQE chose for it, so a later scan of a small cache runs a
@@ -30,7 +32,8 @@ from pyspark.sql import SparkSession
 #   dynamic broadcast-join demotion/promotion replace any hand tuning.
 # - Batch shuffles start 32 wide (initialPartitionNum); AQE coalesces.
 #   Streaming state and foreachBatch frames get no AQE and shuffle at
-#   shuffle.partitions, which get_spark derives from the cores.
+#   shuffle.partitions, which get_spark derives from the cores; the
+#   engine's drains cap it at the cores in any session.
 # - AQE may change a cached plan's output partitioning. Spark's default
 #   (false) caches a relation at the 32 uncoalesced initial partitions,
 #   so every later scan of a persisted intermediate ran 32 near-empty

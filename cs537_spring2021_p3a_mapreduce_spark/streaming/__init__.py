@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterable
+from contextlib import contextmanager
 from typing import Any
 
 import pandas as pd
@@ -311,6 +312,67 @@ def dedup_stream(
     )
 
 
+@contextmanager
+def _drain_width(spark: SparkSession):
+    """Set the state width of the drains started inside the block, and
+    restore the session's conf after. The width is
+    ``min(spark.sql.shuffle.partitions, defaultParallelism, cores)``:
+    ``get_spark`` already sets the first to the second, so the rule
+    matters for other sessions — a vanilla driver session's 200, or
+    the oracle gate's ``local[32]`` on a 4-core host. Each stateful
+    micro-batch commits one state store per partition, so on small
+    bounded inputs the cost follows the width, not the data (the
+    registered drains at sf0.01, in the gate's session on 4 cores:
+    159 s summed 32 wide, 89-96 s 4 wide). A restarted stream keeps the
+    width its checkpoint recorded at its first batch."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    width = min(
+        int(prev), spark.sparkContext.defaultParallelism, os.cpu_count() or 1
+    )
+    spark.conf.set(key, str(width))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _await_offset(q, field: str, target: int, label: str) -> None:
+    """Run the started query ``q`` until its source's committed
+    ``endOffset[field]`` reaches ``target``, let the final batch's
+    output commit, and stop it. For Python micro-batch sources, which
+    fall back to one paced batch under availableNow: their offset axis
+    is the progress signal. A failed query raises its cause at once
+    rather than burning the 120 s deadline, which raises
+    ``TimeoutError``."""
+    import ast
+    import json
+    import time
+
+    deadline = time.time() + 120
+    while time.time() < deadline:
+        exc = q.exception()
+        if exc is not None:
+            raise exc
+        p = q.lastProgress
+        if p and p["sources"]:
+            end = p["sources"][0].get("endOffset")
+            if isinstance(end, str):
+                # a dict in some pyspark paths, JSON or a repr string
+                # in others
+                try:
+                    end = json.loads(end)
+                except ValueError:
+                    end = ast.literal_eval(end)
+            if end and end.get(field, 0) >= target:
+                q.processAllAvailable()
+                q.stop()
+                return
+        time.sleep(0.05)
+    q.stop()
+    raise TimeoutError(f"{label} drain did not reach {field} {target}")
+
+
 def run_to_keyed_parquet(
     df: DataFrame,
     path: str,
@@ -324,7 +386,8 @@ def run_to_keyed_parquet(
     the documented Spark pattern for sinks without native streaming
     writers; with a transactional table (Delta/Iceberg) the same
     callback body becomes an atomic MERGE, giving exactly-once.
-    Drains available input (availableNow) and blocks."""
+    Drains available input (availableNow) and blocks; the state is
+    as wide as ``_drain_width`` sets it."""
     from ..sources import upsert_keyed_parquet
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -332,14 +395,15 @@ def run_to_keyed_parquet(
             batch_df.sparkSession, batch_df, path, key_cols
         )
 
-    q = (
-        df.writeStream.foreachBatch(_merge)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with _drain_width(df.sparkSession):
+        q = (
+            df.writeStream.foreachBatch(_merge)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
 
 
 def _copy_table_files(
@@ -394,7 +458,7 @@ def stream_time_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cnt").alias("n_events"),
     )
     name = f"stream_tb_{uuid.uuid4().hex[:8]}"
-    run_to_memory(out, name, os.path.join(work, "ckpt"), "complete", shuffle_partitions=8)
+    run_to_memory(out, name, os.path.join(work, "ckpt"), "complete")
     return spark.table(name)
 
 
@@ -413,7 +477,7 @@ def stream_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = scratch_dir("stream_rc_")
     counts = running_user_counts(_staged_events_stream(spark, sf_dir, work))
     name = f"stream_rc_{uuid.uuid4().hex[:8]}"
-    run_to_memory(counts, name, os.path.join(work, "ckpt"), "update", shuffle_partitions=8)
+    run_to_memory(counts, name, os.path.join(work, "ckpt"), "update")
     return (
         spark.table(name)
         .groupBy("user_id")
@@ -451,7 +515,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
     )
     name = f"stream_sw_{uuid.uuid4().hex[:8]}"
-    run_to_memory(out, name, os.path.join(work, "ckpt"), "complete", shuffle_partitions=8)
+    run_to_memory(out, name, os.path.join(work, "ckpt"), "complete")
     return spark.table(name)
 
 
@@ -494,7 +558,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n")
     )
     name = f"stream_dd_{uuid.uuid4().hex[:8]}"
-    run_to_memory(counts, name, os.path.join(work, "ckpt"), "complete", shuffle_partitions=8)
+    run_to_memory(counts, name, os.path.join(work, "ckpt"), "complete")
     return spark.table(name)
 
 
@@ -513,17 +577,9 @@ def stream_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = scratch_dir("stream_up_")
     counts = running_user_counts(_staged_events_stream(spark, sf_dir, work))
     path = os.path.join(work, "totals")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_to_keyed_parquet(
-            counts,
-            path,
-            key_cols=["user_id"],
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_to_keyed_parquet(
+        counts, path, key_cols=["user_id"], checkpoint_dir=os.path.join(work, "ckpt")
+    )
     from ..sources import read_keyed_table
 
     return read_keyed_table(spark, path).select("user_id", "n_events")
@@ -547,7 +603,7 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cnt").alias("n_events"),
     )
     name = f"stream_sl_{uuid.uuid4().hex[:8]}"
-    run_to_memory(out, name, os.path.join(work, "ckpt"), "complete", shuffle_partitions=8)
+    run_to_memory(out, name, os.path.join(work, "ckpt"), "complete")
     return spark.table(name)
 
 
@@ -569,7 +625,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev_c.where(F.col("event_type") == "click"),
     )
     name = f"stream_ij_{uuid.uuid4().hex[:8]}"
-    run_to_memory(joined, name, os.path.join(work, "ckpt"), "append", shuffle_partitions=8)
+    run_to_memory(joined, name, os.path.join(work, "ckpt"), "append")
     return spark.table(name)
 
 
@@ -685,7 +741,7 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         keep_event_time=True,
     )
     name = f"stream_oj_{uuid.uuid4().hex[:8]}"
-    run_to_memory(joined, name, os.path.join(work, "ckpt"), "append", shuffle_partitions=8)
+    run_to_memory(joined, name, os.path.join(work, "ckpt"), "append")
     # provable-emission cutoff = batch-1 watermark, via 1-row
     # broadcast, in epoch-µs integers end to end
     from ..catalog import table as _table
@@ -745,17 +801,9 @@ def stream_custom_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = raw.groupBy("event_type").agg(F.count("*").alias("n_events"))
     name = f"stream_cs_{uuid.uuid4().hex[:8]}"
     # availableNow snapshots only the simple reader's prefetched
-    # batch, so drain with a continuous trigger and stop once the
-    # source's committed offset reaches the file's row count — the
-    # offset axis IS the progress signal, which is the point of this
-    # entry.
-    import time
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # 2 state partitions: the aggregate has a handful of groups, and
-    # per-batch cost here is state-store commits x partitions, not
-    # data (measured: 8 partitions ~0.6 s/batch, 2 ~0.35 s/batch)
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
+    # batch, so drain with a continuous trigger until the source's
+    # committed offset reaches the file's row count
+    with _drain_width(spark):
         q = (
             counts.writeStream.format("memory")
             .queryName(name)
@@ -764,38 +812,7 @@ def stream_custom_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(processingTime="0 seconds")
             .start()
         )
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            # surface a failed query NOW — polling lastProgress on a
-            # dead query would otherwise burn the whole timeout and
-            # raise a misleading TimeoutError instead of the cause
-            exc = q.exception()
-            if exc is not None:
-                raise exc
-            p = q.lastProgress
-            if p and p["sources"]:
-                end = p["sources"][0].get("endOffset")
-                if isinstance(end, str):
-                    # dict in some pyspark paths, JSON or repr string
-                    # in others — accept all three
-                    import ast
-                    import json
-
-                    try:
-                        end = json.loads(end)
-                    except ValueError:
-                        end = ast.literal_eval(end)
-                if end and end.get("rank", 0) >= n_rows:
-                    # one more cycle so the final batch's output commits
-                    q.processAllAvailable()
-                    break
-            time.sleep(0.05)
-        else:
-            q.stop()
-            raise TimeoutError("mr_eventlog drain did not reach EOF offset")
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        _await_offset(q, "rank", n_rows, "mr_eventlog")
     return spark.table(name)
 
 
@@ -838,7 +855,7 @@ def stream_enrich_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = f"stream_en_{uuid.uuid4().hex[:8]}"
-    run_to_memory(enriched, name, os.path.join(work, "ckpt"), "complete", shuffle_partitions=8)
+    run_to_memory(enriched, name, os.path.join(work, "ckpt"), "complete")
     return spark.table(name)
 
 
@@ -892,9 +909,7 @@ def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = f"stream_ohlc_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        bars, name, os.path.join(work, "ckpt"), "complete", shuffle_partitions=8
-    )
+    run_to_memory(bars, name, os.path.join(work, "ckpt"), "complete")
     return spark.table(name)
 
 
@@ -936,9 +951,7 @@ def stream_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(1 - F.col("r_stop")).alias("fail_stop"),
     )
     name = f"stream_gq_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        audit, name, os.path.join(work, "ckpt"), "complete", shuffle_partitions=8
-    )
+    run_to_memory(audit, name, os.path.join(work, "ckpt"), "complete")
     return spark.table(name)
 
 
@@ -1008,9 +1021,7 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = f"stream_dc_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        out, name, os.path.join(work, "ckpt"), "append", shuffle_partitions=8
-    )
+    run_to_memory(out, name, os.path.join(work, "ckpt"), "append")
     return spark.table(name)
 
 
@@ -1109,9 +1120,7 @@ def stream_sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.readStream.schema(schema).parquet(src)
     out = bottomk_sample_stream(docs)
     name = f"stream_bk_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        out, name, os.path.join(work, "ckpt"), "update", shuffle_partitions=8
-    )
+    run_to_memory(out, name, os.path.join(work, "ckpt"), "update")
     # keep only each source's FINAL emission (single-batch drains
     # emit once; multi-batch tests emit per batch — max n_seen wins)
     t = spark.table(name)
@@ -1214,9 +1223,7 @@ def stream_quality_filter_trained(spark: SparkSession, sf_dir: str) -> DataFrame
         .withColumn("keep", (F.col("logit") >= 0).cast("int"))
     )
     name = f"stream_qf_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        out, name, os.path.join(work, "ckpt"), "append", shuffle_partitions=8
-    )
+    run_to_memory(out, name, os.path.join(work, "ckpt"), "append")
     return spark.table(name)
 
 
@@ -1265,9 +1272,7 @@ def stream_dedup_docs_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = f"stream_mh_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        out, name, os.path.join(work, "ckpt"), "complete", shuffle_partitions=8
-    )
+    run_to_memory(out, name, os.path.join(work, "ckpt"), "complete")
     return spark.table(name)
 
 
@@ -1349,13 +1354,7 @@ def stream_dedup_docs_minhash_bounded(
         watermark=LSH_WATERMARK,
     )
     name = f"stream_mhb_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        survivors.select("sig"),
-        name,
-        os.path.join(work, "ckpt"),
-        "append",
-        shuffle_partitions=8,
-    )
+    run_to_memory(survivors.select("sig"), name, os.path.join(work, "ckpt"), "append")
     return spark.table(name).orderBy("sig")
 
 
@@ -1671,12 +1670,7 @@ def stream_dedup_docs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = dedup_docs_lsh_stream(docs_a, docs_b, spark.read.parquet(shd_dir))
     name = f"stream_lsh_{uuid.uuid4().hex[:8]}"
-    # 4 state partitions (the estimated tier's measured sizing:
-    # bounded staged drain, per-batch cost = state commits x
-    # partitions; 16.8 s at 8 -> 13.6 s at 4 at sf0.1)
-    run_to_memory(
-        pairs, name, os.path.join(work, "ckpt"), "append", shuffle_partitions=4
-    )
+    run_to_memory(pairs, name, os.path.join(work, "ckpt"), "append")
     return (
         spark.table(name)
         .groupBy("b_id")
@@ -1873,12 +1867,7 @@ def stream_dedup_docs_lsh_estimated(
     )
     pairs = dedup_docs_lsh_stream_estimated(docs_a, docs_b)
     name = f"stream_lshe_{uuid.uuid4().hex[:8]}"
-    # 4 state partitions: the drain is a bounded staged input and
-    # per-batch cost is state-store commits x partitions (measured
-    # 14.9 s at 8 -> 12.4 s at 4 at sf0.1; 2 gains nothing more)
-    run_to_memory(
-        pairs, name, os.path.join(work, "ckpt"), "append", shuffle_partitions=4
-    )
+    run_to_memory(pairs, name, os.path.join(work, "ckpt"), "append")
     return (
         spark.table(name)
         .groupBy("b_id")
@@ -2014,9 +2003,7 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("vec_id").alias("min_vec_id"),
     )
     name = f"stream_ivf_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        out, name, os.path.join(work, "ckpt"), "complete", shuffle_partitions=8
-    )
+    run_to_memory(out, name, os.path.join(work, "ckpt"), "complete")
     return spark.table(name)
 
 
@@ -2070,9 +2057,7 @@ def stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines = spark.readStream.schema(schema).parquet(src)
     counts = streaming_wordcount(lines, "text")
     name = f"stream_wc_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        counts, name, os.path.join(work, "ckpt"), "complete", shuffle_partitions=8
-    )
+    run_to_memory(counts, name, os.path.join(work, "ckpt"), "complete")
     return spark.table(name)
 
 
@@ -2108,9 +2093,7 @@ def stream_topk_words(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(STREAM_TOPK)
     )
     name = f"stream_topk_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        ranked, name, os.path.join(work, "ckpt"), "complete", shuffle_partitions=8
-    )
+    run_to_memory(ranked, name, os.path.join(work, "ckpt"), "complete")
     return spark.table(name)
 
 
@@ -2138,7 +2121,7 @@ def state_store_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     name = f"state_ins_{uuid.uuid4().hex[:8]}"
-    run_to_memory(counts, name, ckpt, "complete", shuffle_partitions=8)
+    run_to_memory(counts, name, ckpt, "complete")
     state = spark.read.format("statestore").load(ckpt)
     # the state schema is (key: struct, value: struct, partition_id);
     # the value struct carries the aggregation BUFFER's field name
@@ -2413,10 +2396,7 @@ def stream_tws_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        run_to_memory(
-            counts, name, os.path.join(work, "ckpt"), "update",
-            shuffle_partitions=8,
-        )
+        run_to_memory(counts, name, os.path.join(work, "ckpt"), "update")
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -2486,9 +2466,7 @@ def stream_session_close_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, gap_ms=gap_us // 1000, watermark="1 hour"
     )
     name = f"stream_sct_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        closed, name, os.path.join(work, "ckpt"), "append", shuffle_partitions=8
-    )
+    run_to_memory(closed, name, os.path.join(work, "ckpt"), "append")
     # batch-side idle-user set: last event + gap ≤ final watermark
     wm = ev.agg((F.max(F.unix_micros("ts")) - delay_us).alias("wm_us"))
     idle = (
@@ -2593,7 +2571,7 @@ def stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     updates = pattern_match_updates(ev)
     name = f"stream_pm_{uuid.uuid4().hex[:8]}"
-    run_to_memory(updates, name, os.path.join(work, "ckpt"), "update", shuffle_partitions=8)
+    run_to_memory(updates, name, os.path.join(work, "ckpt"), "update")
     last = spark.table(name).groupBy("user_id").agg(
         *[
             F.expr(f"max_by(m_{pname}, upd)").alias(f"m_{pname}")
@@ -2654,10 +2632,7 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_buckets"),
     )
     name = f"stream_chain_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        hourly, name, os.path.join(work, "ckpt"), "append",
-        shuffle_partitions=8,
-    )
+    run_to_memory(hourly, name, os.path.join(work, "ckpt"), "append")
     cutoff = (
         _table(spark, sf_dir, "events")
         .agg(
@@ -2864,13 +2839,8 @@ def stream_manifest_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     name = f"stream_cdf_{uuid.uuid4().hex[:8]}"
-    # a Python micro-batch source doesn't support availableNow (it
-    # would snapshot one paced offset step); drain with a continuous
-    # trigger and stop once the committed offset reaches the table's
-    # current generation — the offset axis IS the progress signal
-    # (the mr_eventlog drain discipline)
+    # drain until the committed offset reaches the current generation
     import json as _json
-    import time as _time
 
     from ..sources.manifest_sink import MANIFEST as _MF
 
@@ -2884,29 +2854,7 @@ def stream_manifest_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="0 seconds")
         .start()
     )
-    deadline = _time.time() + 120
-    while _time.time() < deadline:
-        exc = q.exception()
-        if exc is not None:
-            raise exc
-        p = q.lastProgress
-        if p and p["sources"]:
-            end = p["sources"][0].get("endOffset")
-            if isinstance(end, str):
-                import ast
-
-                try:
-                    end = _json.loads(end)
-                except ValueError:
-                    end = ast.literal_eval(end)
-            if end and end.get("gen", 0) >= target_gen:
-                q.processAllAvailable()
-                break
-        _time.sleep(0.05)
-    else:
-        q.stop()
-        raise TimeoutError("mr_manifest_cdf drain did not reach head gen")
-    q.stop()
+    _await_offset(q, "gen", target_gen, "mr_manifest_cdf")
     raw = spark.table(name)
     # update keys = (gen, k) carrying BOTH an insert and a delete —
     # one aggregate, and re-aliased to fresh names so the join back
@@ -3095,9 +3043,7 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = f"stream_late_{uuid.uuid4().hex[:8]}"
-    q = run_to_memory(
-        windows, name, os.path.join(work, "ckpt"), "append", shuffle_partitions=8
-    )
+    q = run_to_memory(windows, name, os.path.join(work, "ckpt"), "append")
     dropped = 0
     for p in q.recentProgress:
         for op in p.get("stateOperators", []):
@@ -3220,9 +3166,7 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = f"stream_az_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        out, name, os.path.join(work, "ckpt"), "append", shuffle_partitions=8
-    )
+    run_to_memory(out, name, os.path.join(work, "ckpt"), "append")
     return spark.table(name).orderBy("event_id")
 
 
@@ -3484,39 +3428,27 @@ def run_to_memory(
     table: str,
     checkpoint_dir: str,
     output_mode: str = "append",
-    shuffle_partitions: int | None = None,
 ):
     """Drain all currently-available input through the streaming
     plan into an in-memory table (test/debug sink): availableNow
     trigger, blocks until done. Production sinks are writeStream to
-    parquet/Kafka with the same plan.
-
-    ``shuffle_partitions`` scopes the state-store partition count to
-    this drain (restored after): a stream's state partitioning is
-    fixed at the first checkpoint, and sizing it to the expected key
-    cardinality is the per-stream deploy decision. ``get_spark``
-    already sizes it to the cores; the explicit counts the registered
-    drains pass are for vanilla sessions, whose default (Spark's 200)
-    is pure per-partition overhead on their single-file bounded
-    inputs."""
+    parquet/Kafka with the same plan. The state is as wide as
+    ``_drain_width`` sets it: the session's shuffle partitions, capped
+    at the cores, fixed by the checkpoint's first batch."""
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(table)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with _drain_width(spark):
+            q = (
+                df.writeStream.format("memory")
+                .queryName(table)
+                .outputMode(output_mode)
+                .option("checkpointLocation", checkpoint_dir)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
         return q  # terminated; recentProgress still readable (metrics)
     finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         # the drain is done: release its state-store provider maps
         # now rather than holding them on heap until the maintenance
         # tick (see session.unload_state_providers)

@@ -4,6 +4,7 @@ batch/stream parity Spark's unified model promises."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cs537_spring2021_p3a_mapreduce_spark import streaming as st
@@ -563,8 +564,6 @@ def test_tws_entry_gated_on_protobuf(spark):
 
 
 def test_tws_running_totals_match_batch(spark, tmp_path):
-    import pytest
-
     from cs537_spring2021_p3a_mapreduce_spark import streaming as st
 
     if not st.tws_available():
@@ -657,9 +656,7 @@ def test_pattern_match_batch_split_invariant(spark, tmp_path):
     )
     updates = stm.pattern_match_updates(ev)
     name = f"pm_split_{uuid.uuid4().hex[:8]}"
-    stm.run_to_memory(
-        updates, name, str(tmp_path / "ckpt"), "update", shuffle_partitions=4
-    )
+    stm.run_to_memory(updates, name, str(tmp_path / "ckpt"), "update")
     got_tbl = spark.table(name)
     # at least 2 updates for some user proves a real multi-batch run
     assert got_tbl.agg(F.max("upd")).collect()[0][0] >= 2
@@ -905,9 +902,7 @@ def test_stream_dedup_docs_lsh_horizon_and_state_eviction(spark, tmp_path):
         horizon_s=1000,
     )
     name = f"lsh_evict_{uuid.uuid4().hex[:8]}"
-    q = run_to_memory(
-        pairs, name, str(tmp_path / "ckpt"), "append", shuffle_partitions=4
-    )
+    q = run_to_memory(pairs, name, str(tmp_path / "ckpt"), "append")
     got = spark.table(name).collect()
     # only the in-horizon pair is flagged, in every matching band
     assert {(r.a_id, r.b_id) for r in got} == {(0, 300)}
@@ -931,8 +926,6 @@ def test_stream_dedup_docs_lsh_fails_loudly_on_uncovered_doc(spark, tmp_path):
     near-dup, the query fails with an error naming that doc_id,
     instead of an inner attach join silently dropping the pair."""
     import uuid
-
-    import pytest
 
     from cs537_spring2021_p3a_mapreduce_spark.streaming import (
         _lsh_band_rows,
@@ -963,7 +956,6 @@ def test_stream_dedup_docs_lsh_fails_loudly_on_uncovered_doc(spark, tmp_path):
             f"lsh_uncovered_{uuid.uuid4().hex[:8]}",
             str(tmp_path / "ckpt"),
             "append",
-            shuffle_partitions=4,
         )
 
 
@@ -993,26 +985,18 @@ def test_lsh_estimated_tier_state_drop(spark, tmp_path):
     base = [f"tok{i}" for i in range(300)]
     near = list(base)
     near[150] = "swapped"  # 3 shingles differ → J ≈ 0.98
-    rows = [
+    planted = [
         (0, " ".join(base)),
         (10, " ".join(near)),
         (20, " ".join(f"zz{i}" for i in range(300))),  # unrelated
     ]
-    src = str(tmp_path / "in")
-    os.makedirs(src, exist_ok=True)
-    spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-        1
-    ).write.mode("overwrite").parquet(src)
-
-    def reader():
-        return spark.readStream.schema("doc_id long, text string").parquet(src)
+    filler = [
+        (100 + j, " ".join(f"u{j}_{i}" for i in range(300))) for j in range(6)
+    ]
 
     def drain(pairs, tag):
         name = f"lshtier_{tag}_{uuid.uuid4().hex[:8]}"
-        q = run_to_memory(
-            pairs, name, str(tmp_path / f"ckpt_{tag}"), "append",
-            shuffle_partitions=4,
-        )
+        q = run_to_memory(pairs, name, str(tmp_path / f"ckpt_{tag}"), "append")
         state = [
             op
             for p in q.recentProgress
@@ -1022,38 +1006,58 @@ def test_lsh_estimated_tier_state_drop(spark, tmp_path):
         bytes_max = max((op.get("memoryUsedBytes", 0) for op in state), default=0)
         return spark.table(name).collect(), rows_max, bytes_max
 
-    shd_of = _lsh_shd_lookup(
-        spark.read.schema("doc_id long, text string").parquet(src)
+    def tiers(rows, tag):
+        src = str(tmp_path / f"in_{tag}")
+        os.makedirs(src, exist_ok=True)
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+            1
+        ).write.mode("overwrite").parquet(src)
+
+        def reader():
+            return spark.readStream.schema("doc_id long, text string").parquet(src)
+
+        shd_of = _lsh_shd_lookup(
+            spark.read.schema("doc_id long, text string").parquet(src)
+        )
+        exact = drain(
+            dedup_docs_lsh_stream(
+                _lsh_band_rows(reader(), "7 days"),
+                _lsh_band_rows(reader(), "7 days"),
+                shd_of,
+            ),
+            f"exact_{tag}",
+        )
+        est = drain(
+            dedup_docs_lsh_stream_estimated(
+                _lsh_band_rows(reader(), "7 days", payload="estimated"),
+                _lsh_band_rows(reader(), "7 days", payload="estimated"),
+            ),
+            f"est_{tag}",
+        )
+        return exact, est
+
+    (got_e, rows_e, bytes_e), (got_l, rows_l, bytes_l) = tiers(planted, "planted")
+    (got_e2, rows_e2, bytes_e2), (got_l2, rows_l2, bytes_l2) = tiers(
+        planted + filler, "grown"
     )
-    got_e, rows_e, bytes_e = drain(
-        dedup_docs_lsh_stream(
-            _lsh_band_rows(reader(), "7 days"),
-            _lsh_band_rows(reader(), "7 days"),
-            shd_of,
-        ),
-        "exact",
-    )
-    got_l, rows_l, bytes_l = drain(
-        dedup_docs_lsh_stream_estimated(
-            _lsh_band_rows(reader(), "7 days", payload="estimated"),
-            _lsh_band_rows(reader(), "7 days", payload="estimated"),
-        ),
-        "est",
-    )
-    # same verdicts on the planted corpus
-    assert {(r.a_id, r.b_id) for r in got_e} == {(0, 10)}
-    assert {(r.a_id, r.b_id) for r in got_l} == {(0, 10)}
-    assert all(r.n_match >= LSH_EST_MATCH_MIN for r in got_l)
+    # same verdicts on the planted corpus, and the filler adds none
+    for got in (got_e, got_l, got_e2, got_l2):
+        assert {(r.a_id, r.b_id) for r in got} == {(0, 10)}
+    assert all(r.n_match >= LSH_EST_MATCH_MIN for r in got_l + got_l2)
     # same state ROW count (band rows); the exact tier's rows are
     # payload-free (doc_id, ev, band, bk) while the estimated tier
     # buffers a 32-long signature per row — exact must be materially
-    # smaller. On this 3-doc corpus the fixed per-partition store
-    # overhead (4 partitions x 2 join sides) dominates both numbers,
-    # so the observable margin is modest (measured 28.7 KB vs
-    # 42.1 KB); require a 20% gap, which only the payload difference
-    # can produce
+    # smaller. Each state partition adds a fixed store overhead that
+    # grows with the drain width and would swamp the 3-doc payload on
+    # a wide host (measured at 64 partitions: 131 KB vs 144 KB), so
+    # compare what the 6 filler docs ADD at one width: payload only
+    # (measured 0.65-0.68 of the estimated tier's growth from 1 to 64
+    # partitions); require a 20% gap, which only the payload
+    # difference can produce
     assert rows_l == rows_e > 0
-    assert 0 < bytes_e < bytes_l * 0.8, (bytes_e, bytes_l)
+    assert rows_l2 == rows_e2 > rows_e
+    grow_e, grow_l = bytes_e2 - bytes_e, bytes_l2 - bytes_l
+    assert 0 < grow_e < grow_l * 0.8, (grow_e, grow_l)
 
 
 def test_stream_ivf_assign_partitions_whole_corpus(spark):
@@ -1113,7 +1117,6 @@ def test_bounded_minhash_dedup_horizon_reemission_and_eviction(spark, tmp_path):
         name,
         str(tmp_path / "ckpt"),
         "append",
-        shuffle_partitions=4,
     )
     out = spark.table(name).collect()
     by_doc = {r.doc_id for r in out}
@@ -1208,9 +1211,7 @@ def test_stream_bottomk_multibatch_order_invariance(spark, tmp_path):
         .parquet(src + "/*.parquet")
     )
     out = streaming.bottomk_sample_stream(stream)
-    streaming.run_to_memory(
-        out, "bk_test", str(tmp_path / "ckpt"), "update", shuffle_partitions=4
-    )
+    streaming.run_to_memory(out, "bk_test", str(tmp_path / "ckpt"), "update")
     rows = spark.table("bk_test").collect()
     # two emissions per source (one per batch) -> final = max n_seen
     final = {}
@@ -1336,3 +1337,67 @@ def test_chained_windows_two_stateful_operators(spark):
     # some hour genuinely aggregates >1 fifteen-minute bucket —
     # otherwise the second stateful level would be vacuous
     assert any(nb > 1 for _, nb in got.values())
+
+
+def _drain_state_widths(spark, conf: str, drain) -> set[int]:
+    """``numShufflePartitions`` of every state operator in every
+    progress event of the streams ``drain()`` runs with the session's
+    shuffle conf at ``conf``, read through a listener (registered
+    drains return a table, not their query)."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Widths(StreamingQueryListener):
+        def __init__(self):
+            self.widths: set[int] = set()
+            self.done = threading.Event()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            for op in event.progress.stateOperators:
+                self.widths.add(op.numShufflePartitions)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            # the bus delivers a query's progress before its end
+            self.done.set()
+
+    listener = Widths()
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", conf)
+    spark.streams.addListener(listener)
+    try:
+        drain()
+        assert listener.done.wait(60)
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return listener.widths
+
+
+@pytest.mark.parametrize(
+    "entry, conf",
+    [
+        ("stream_wordcount", "3"),
+        ("stream_upsert_totals", "3"),
+        ("stream_custom_source_counts", "3"),
+        # a vanilla session's default would mean 200 state commits
+        # per micro-batch
+        ("stream_wordcount", "200"),
+    ],
+)
+def test_registered_drain_state_width_follows_session_conf(spark, entry, conf):
+    """The run_to_memory, keyed-parquet and offset-polled drains all
+    take their state width from the session's shuffle conf, capped at
+    the cores, so a partition-invariance replay reaches them."""
+    import os
+
+    fn = getattr(st, entry)
+    widths = _drain_state_widths(spark, conf, lambda: fn(spark, SF_SMOKE).collect())
+    cap = min(spark.sparkContext.defaultParallelism, os.cpu_count())
+    assert widths == {min(int(conf), cap)}
