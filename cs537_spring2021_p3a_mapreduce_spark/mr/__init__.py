@@ -25,26 +25,41 @@ This module re-expresses that contract Spark-first:
   only correct reducer there too.
 - ``Partitioner`` is a Catalyst *expression factory*
   ``(key_col, n) -> pid_col`` rather than a C function pointer, so
-  partition-id computation stays JVM-side and codegen'd. The default
-  is the bit-exact djb2 of MR_DefaultHashPartition
-  (mapreduce.c:88-94).
+  partition-id computation stays JVM-side, with no Python crossing.
+  The default is the bit-exact djb2 of MR_DefaultHashPartition
+  (mapreduce.c:88-94). It is not codegen'd: djb2 folds the key's
+  characters through higher-order functions, which Spark interprets
+  row by row: on 953 983 pairs from 16k documents (4 vCPUs, warm)
+  it cost ~0.9 s (``mr_run_agg`` 1.92 s per pair, 0.99 s per
+  distinct key), so both entries evaluate it on as few rows as they
+  can.
+- ``Combiner`` is Hadoop's map-side pre-reduce (Dean & Ghemawat,
+  OSDI 2004, §4.3): ``combiner(key, values) -> str`` folds one Arrow
+  batch's values of a key into one value before the shuffle. The
+  reducer then sees combiner outputs, so a job opts in only when its
+  reducer accepts them (``mr_wordcount``'s sums ``int(v)``, which is
+  right with or without it). Without a combiner the reducer sees the
+  mapper's raw value multiset, as in the reference.
 
-Execution shape (one job): ``mapInPandas`` (Arrow-batched flatMap)
-→ hash shuffle on pid → per-partition key sort → streaming grouped
-scan (``mapInPandas`` with a cross-batch run carry). That is the
-reference pipeline move for move — shuffle (mapreduce.c:37-55),
-per-partition qsort (mapreduce.c:225-228), reduce loop
-(mapreduce.c:127-138) — with Spark's shuffle standing in for the
-locked shared arrays and Python overhead paid per Arrow batch, not
-per key.
+Execution shape (one job): ``mapInPandas`` (Arrow-batched flatMap,
+then the combiner if any) → pid column → hash shuffle on pid →
+per-partition key sort → streaming grouped scan (``mapInPandas``
+with a cross-batch run carry). That is the reference pipeline move
+for move — shuffle (mapreduce.c:37-55), per-partition qsort
+(mapreduce.c:225-228), reduce loop (mapreduce.c:127-138) — with
+Spark's shuffle standing in for the locked shared arrays and Python
+overhead paid per Arrow batch, not per key. A combiner shrinks
+everything after the map: ``mr_wordcount`` at 16k documents ships
+127 504 rows instead of 953 983.
 
 Scale notes (100 TB): the map phase is narrow and Arrow-batched; the
 reduce phase holds ONE KEY GROUP per pandas frame in executor
 memory. That matches the reference (which also materializes each
 key's run in RAM) but a combinable reduction (count/sum/min/max)
 should use :func:`mr_run_agg` instead — pure Catalyst, map-side
-partial aggregation, no Python in the hot path. ``mr_run`` is the
-general contract; ``mr_run_agg`` is the fast path.
+partial aggregation, no Python in the hot path, and the partitioner
+evaluated once per distinct key. ``mr_run`` is the general contract;
+``mr_run_agg`` is the fast path.
 """
 
 from __future__ import annotations
@@ -66,6 +81,7 @@ DEFAULT_NUM_REDUCERS = 10
 Mapper = Callable[[Any], Iterable[tuple[str, str]]]
 Reducer = Callable[[str, Iterator[str], int], Any]
 Partitioner = Callable[[Column, int], Column]
+Combiner = Callable[[str, Iterator[str]], str]
 
 
 def default_hash_partition(key: Column, n_partitions: int) -> Column:
@@ -75,7 +91,11 @@ def default_hash_partition(key: Column, n_partitions: int) -> Column:
 
 
 def _pairs(
-    df: DataFrame, mapper: Mapper, input_col: str, num_mappers: int | None
+    df: DataFrame,
+    mapper: Mapper,
+    input_col: str,
+    num_mappers: int | None,
+    combiner: Combiner | None = None,
 ) -> DataFrame:
     """Map phase shared by mr_run / mr_run_agg: Arrow-batched flatMap
     of the user mapper into (key, value) string pairs.
@@ -86,7 +106,10 @@ def _pairs(
     of the flatMap. Default (None) lets the engine pick
     ``defaultParallelism`` — without this, map parallelism equals the
     source's split count, and a single-file source would run the
-    whole Python map phase (and the djb2 fold above it) on one core."""
+    whole Python map phase (and the djb2 fold above it) on one core.
+
+    ``combiner`` (see the module docstring) folds each key's values
+    within one Arrow batch, so a batch emits one row per distinct key."""
     src = df.select(input_col)
     n = num_mappers or df.sparkSession.sparkContext.defaultParallelism
     if n > 1:
@@ -97,6 +120,11 @@ def _pairs(
             # C-level list comprehension instead of nested appends —
             # this per-record loop is the compat layer's hot path
             kv = [p for rec in pdf[input_col] for p in mapper(rec)]
+            if combiner is not None:
+                runs: dict[str, list] = {}
+                for k, v in kv:
+                    runs.setdefault(k, []).append(v)
+                kv = [(k, combiner(k, iter(vs))) for k, vs in runs.items()]
             yield pd.DataFrame({
                 "key": pd.Series([p[0] for p in kv], dtype="object"),
                 "value": pd.Series([p[1] for p in kv], dtype="object"),
@@ -115,6 +143,7 @@ def mr_run(
     value_type: str = "string",
     sort_output: bool = False,
     num_mappers: int | None = None,
+    combiner: Combiner | None = None,
 ) -> DataFrame:
     """``MR_Run`` (mapreduce.h:18-23, mapreduce.c:141-253) as one
     Spark job over a DataFrame source.
@@ -125,7 +154,8 @@ def mr_run(
     sets the partition count, ``partitioner`` defaults to djb2,
     ``num_mappers`` the map parallelism (None = engine-chosen; see
     ``_pairs``). The file-list argv has no analog: the input is any
-    DataFrame.
+    DataFrame. ``combiner`` (default None) pre-reduces each map
+    batch; with None the reducer sees every value the mapper emitted.
 
     ``sort_output=True`` reproduces the *sequential* engine's
     observable global key order (sequential_mapreduce.c:81) — the
@@ -139,7 +169,7 @@ def mr_run(
     if input_col is None:
         input_col = df.columns[0]
 
-    pairs = _pairs(df, mapper, input_col, num_mappers)
+    pairs = _pairs(df, mapper, input_col, num_mappers, combiner)
     keyed = pairs.withColumn(
         "pid", partitioner(F.col("key"), num_reducers).cast("int")
     )
@@ -286,15 +316,19 @@ def mr_run_agg(
     column (e.g. ``F.count('*')``, ``F.sum('value')``) — map-side
     partial aggregation, no per-group pandas materialization. This is
     what the reference's count-reducer (main.c:33-43) *means*, minus
-    the iterator plumbing."""
+    the iterator plumbing.
+
+    The partial aggregate groups on ``key`` alone and the partitioner
+    runs on its output, once per distinct key rather than once per
+    pair; ``pid`` is a function of ``key``, so the rows are the same."""
     if partitioner is None:
         partitioner = default_hash_partition
     if input_col is None:
         input_col = df.columns[0]
 
     pairs = _pairs(df, mapper, input_col, num_mappers)
-    return (
-        pairs.withColumn("pid", partitioner(F.col("key"), num_reducers).cast("int"))
-        .groupBy("pid", "key")
-        .agg(agg.alias("value"))
+    return pairs.groupBy("key").agg(agg.alias("value")).select(
+        partitioner(F.col("key"), num_reducers).cast("int").alias("pid"),
+        "key",
+        "value",
     )

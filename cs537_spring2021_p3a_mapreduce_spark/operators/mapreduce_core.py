@@ -129,41 +129,37 @@ def partitioned_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wordcount(spark, sf_dir).orderBy("token")
 
 
-# Posting-list shard fan-out: the hottest token's aggregation state
-# is corpus_docs / IDX_SHARDS per reducer key instead of corpus_docs.
-IDX_SHARDS = 32
-
-
 def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """token → sorted distinct doc_id list (classic MR inverted
     index; A8 with a list-building reduce). Emitted as a joined
     string so the oracle comparison is type-stable.
 
-    Scale shape — bounded per-key state: a naive
-    ``groupBy(token).collect_set(doc_id)`` holds the full posting
-    list of a stopword token in ONE aggregation buffer (state ∝
-    corpus size → OOM at 100×). Instead postings shard by
-    ``doc_id % IDX_SHARDS``: stage 1 builds per-(token, shard)
-    distinct sets (state ∝ corpus/IDX_SHARDS even for the hottest
-    key, and shards are disjoint so per-shard distinct == global
-    distinct); stage 2 merges IDX_SHARDS pre-reduced arrays per
-    token — it receives ≤ IDX_SHARDS rows per key, not one row per
-    occurrence. The final row still carries the full list because
-    the output contract demands it; a production index would write
-    the stage-1 shards as the (token, shard)-bucketed layout and
-    never materialize the concatenation."""
-    shards = (
-        _token_df(spark, sf_dir)
-        .groupBy("token", (F.col("doc_id") % IDX_SHARDS).alias("shard"))
-        .agg(F.collect_set("doc_id").alias("part"))
+    One shuffle: postings are made unique per document row first
+    (``explode(array_distinct(tokens))``), so the aggregate receives
+    one row per (document, token), not one per occurrence, and
+    ``collect_list`` pre-reduces map-side. The outer
+    ``array_distinct`` keeps a doc_id that appears on two document
+    rows once, as the oracle's ``list(DISTINCT doc_id)`` does.
+
+    Per-key state: the final row carries a token's full posting list,
+    because the output contract demands it, so one aggregation buffer
+    holds that list for the hottest token whatever the plan. A
+    sharded two-stage form (per-(token, doc_id % k) sets, then a
+    merge) bounds only the first stage; its merge held the same full
+    list in one buffer, for a second exchange. A production index
+    would write postings (token, doc_id)-bucketed and never
+    materialize the concatenation."""
+    docs = table(spark, sf_dir, "documents")
+    postings = docs.select(
+        "doc_id", F.explode(F.array_distinct(tokens("text"))).alias("token")
     )
     return (
-        shards.groupBy("token")
-        .agg(
-            F.array_join(
-                F.sort_array(F.flatten(F.collect_list("part"))), ","
-            ).alias("doc_ids"),
-            F.sum(F.size("part")).alias("n_docs"),
+        postings.groupBy("token")
+        .agg(F.sort_array(F.array_distinct(F.collect_list("doc_id"))).alias("ids"))
+        .select(
+            "token",
+            F.array_join("ids", ",").alias("doc_ids"),
+            F.size("ids").cast("long").alias("n_docs"),
         )
     )
 
@@ -171,9 +167,10 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mr_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wordcount driven through the ``mr`` compatibility layer — the
     full reference API shape (MR_Run + Map emitting (token,"1") +
-    counting Reduce, main.c:11-43,64) executed as mapInPandas →
-    djb2 partition → applyInPandas. Exists to prove the compat
-    layer's contract against the same oracle as ``wordcount``; the
+    counting Reduce, main.c:11-43,64) executed as mapInPandas with a
+    summing combiner → djb2 partition → shuffle → sorted streaming
+    reduce in mapInPandas. Exists to prove the compat layer's
+    contract against the same oracle as ``wordcount``; the
     DataFrame-native ``wordcount`` is the production path (pure
     Catalyst, no Python)."""
     from ..mr import mr_run
@@ -185,11 +182,16 @@ def mr_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         # — same clean semantics as functions.text.tokens.
         return ((tok, "1") for tok in line.split())
 
-    def reducer(key: str, values, pid: int) -> int:
-        # The reference Reduce counts get_next yields (main.c:39-40).
-        return sum(1 for _ in values)
+    def combiner(key: str, values) -> str:
+        return str(sum(int(v) for v in values))
 
-    return mr_run(docs, mapper, reducer, value_type="long").select(
+    def reducer(key: str, values, pid: int) -> int:
+        # The reference Reduce counts get_next yields (main.c:39-40);
+        # summing the partial counts is that count whether or not the
+        # combiner ran.
+        return sum(int(v) for v in values)
+
+    return mr_run(docs, mapper, reducer, value_type="long", combiner=combiner).select(
         F.col("key").alias("token"), F.col("value").alias("cnt")
     )
 

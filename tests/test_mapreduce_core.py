@@ -84,6 +84,15 @@ def test_inverted_index_sorted_doc_ids(spark):
     assert row.n_docs == len(ids)
 
 
+def test_inverted_index_doc_id_on_two_rows_listed_once(spark, tmp_path):
+    d = str(tmp_path / "dup_doc_id")
+    spark.createDataFrame(
+        [(1, "a b a"), (1, "a c"), (2, "b")], "doc_id long, text string"
+    ).write.parquet(f"{d}/documents.parquet")
+    got = {(r.token, r.doc_ids, r.n_docs) for r in mc.inverted_index(spark, d).collect()}
+    assert got == {("a", "1", 1), ("b", "1,2", 2), ("c", "1", 1)}
+
+
 def test_heavy_hitters_exact_and_bounded(spark):
     from cs537_spring2021_p3a_mapreduce_spark.operators.mapreduce_core import (
         HH_K,

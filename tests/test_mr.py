@@ -48,6 +48,26 @@ def test_mr_run_agg_fast_path_matches_general_path(spark):
     }
 
 
+def test_combiner_keeps_rows_and_shrinks_map_output(spark):
+    from cs537_spring2021_p3a_mapreduce_spark.mr import _pairs
+
+    docs = table(spark, SF_SMOKE, "documents").select("text")
+
+    def combiner(key, values):
+        return str(sum(int(v) for v in values))
+
+    def reducer(key, values, pid):
+        return sum(int(v) for v in values)
+
+    plain = mr_run(docs, _tok_mapper(), reducer, value_type="long")
+    combined = mr_run(docs, _tok_mapper(), reducer, value_type="long",
+                      combiner=combiner)
+    want = {(r.pid, r.key, r.value) for r in plain.collect()}
+    assert want and {(r.pid, r.key, r.value) for r in combined.collect()} == want
+    raw = _pairs(docs, _tok_mapper(), "text", None).count()
+    assert _pairs(docs, _tok_mapper(), "text", None, combiner).count() < raw
+
+
 def test_partition_ids_are_bitexact_djb2(spark):
     docs = table(spark, SF_SMOKE, "documents").select("text")
     out = mr_run(docs, _tok_mapper(), _count_reducer(), num_reducers=10,

@@ -131,12 +131,11 @@ def test_embedding_centroids_single_shuffle_no_pre_agg_explode(spark):
     assert P.read_schemas(df) == ["struct<embedding:array<float>,label:int>"]
 
 
-def test_inverted_index_is_two_stage_sharded(spark):
-    """Bounded per-key state: shard aggregate then merge aggregate —
-    two exchanges by design (the price of never holding a stopword's
-    full posting list in one buffer)."""
+def test_inverted_index_is_one_stage(spark):
+    """Postings are unique per document before the shuffle and one
+    token aggregate builds the list: one exchange."""
     df = mc.inverted_index(spark, SF_SMOKE)
-    assert P.shuffle_count(df) == 2
+    assert P.shuffle_count(df) == 1
 
 
 def test_q3_pushes_all_three_filters_and_heaps_topk(spark):
